@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** RawLocalFileSystem injecting a fixed per-open latency — the bench's
-  * object-store stand-in for the bin readers' per-open GET round-trip
-  * ([[Bench]] `bin_open_latency` section). Static delay because local-mode
-  * executors share the driver JVM.
+/** RawLocalFileSystem injecting a fixed per-open latency — the
+  * object-store stand-in for the bin readers' per-open GET round-trip, used
+  * by [[Bench]]'s `bin_open_latency` section and by `OpenAheadSpec`. Static
+  * delay because local-mode executors share the driver JVM.
   */
 class SlowOpenLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "slowopen"
@@ -62,10 +62,9 @@ object Bench {
     // jobs + shuffle-write per query, captured on the WARM pass (plan and
     // exchange structure are identical to the measured passes; counters on
     // the warm pass keep the listener settle-sleep out of measured time).
-    // This is the graft.Profile decomposition, institutionalized in every
-    // artifact: a wall-time gap with jobs high / shuffle small is Spark's
-    // ~0.1-0.2 s/stage scheduling floor (amortizes at scale); shuffle high
-    // is data volume (widens at scale). File/stderr artifact only — never
+    // Every artifact carries this decomposition: a wall-time gap with jobs
+    // high / shuffle small is Spark's ~0.1-0.2 s/stage scheduling floor
+    // (amortizes at scale); shuffle high is data volume (widens at scale). File/stderr artifact only — never
     // part of the budget-bounded stdout line.
     val counters = BenchSupport.attachCounters(spark)
     val profile: Map[String, (Int, Double)] = names.map { name =>
@@ -285,11 +284,11 @@ object Bench {
       if (!sys.env.get("SPARK_GRAFT_BINS").contains("1")) None
       else Some(benchBins(spark, dropCachedBlocks _))
     binsJson.foreach(_ => loadSamples += loadAvg)
-    // standing object-store-open-latency A/B for the bespoke bin readers
+    // standing object-store-open-latency point for the bespoke bin readers
     val openLatJson = benchBinOpenLatency(spark)
     loadSamples += loadAvg
     // streaming service loop: sustained incremental near-dedup records/s
-    val streamingJson = benchStreaming(spark, sfDir, dropCachedBlocks _)
+    val streamingJson = benchStreaming(spark, sfDir, dropCachedBlocks _, counters)
     loadSamples += loadAvg
 
     val failedJson = if (failed.isEmpty) "" else s""","failed":[${failed.mkString(",")}]"""
@@ -492,7 +491,7 @@ object Bench {
     * uses a fresh history dir + epoch.
     */
   private def benchStreaming(spark: SparkSession, sfDir: String,
-      dropCachedBlocks: () => Unit): String =
+      dropCachedBlocks: () => Unit, counters: BenchSupport.Counters): String =
     try {
       import org.apache.spark.sql.functions._
       val docs = Tables.load(spark, sfDir, "documents")
@@ -555,59 +554,29 @@ object Bench {
       // STANDING jobs/batch metric (round-16 verdict task #6): each removed
       // job bought ~55 ms/batch in rounds 15-16, so a regression here is a
       // latency regression at micro-batch sizes — count Spark jobs over the
-      // instrumented loop and keep the ratio in the artifact
-      def measuredLoop(fused: Boolean, epoch: String,
-          sink: (String, Double) => Unit): (Double, Int) = {
-        val jobCount = new java.util.concurrent.atomic.AtomicInteger()
-        val jobListener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            val _ = jobCount.incrementAndGet()
-          }
-        }
-        val work = java.nio.file.Files.createTempDirectory("graft-bench-stream-decomp")
-        spark.sparkContext.addSparkListener(jobListener)
+      // instrumented loop with the session's counter listener
+      val work = java.nio.file.Files.createTempDirectory("graft-bench-stream-decomp")
+      val decompWall =
         try {
           dropCachedBlocks(); System.gc()
+          counters.reset()
           val d = configs(1)._2
           val t0 = System.nanoTime()
           (0 until slices).foreach { b =>
             val _ = graft.streaming.StreamingNearDedup.dedupBatch(
               d.filter(pmod(col("doc_id"), lit(slices)) === b), b.toLong,
-              work.toString, epoch = epoch, phaseSink = sink, fusedProbe = fused)
+              work.toString, epoch = "bench-decomp",
+              phaseSink = (n, s) => phaseTotals(n) = phaseTotals.getOrElse(n, 0.0) + s)
           }
           val wall = (System.nanoTime() - t0) / 1e9
-          // async listener bus: poll until the observed job count has been
-          // stable for 250 ms (bounded at 5 s) — a fixed sleep can drop
-          // events still queued past it on a loaded machine, silently
-          // under-reporting the standing jobs_per_batch metric
-          var last = jobCount.get
-          var stableMs = 0
-          var waitedMs = 0
-          while (stableMs < 250 && waitedMs < 5000) {
-            Thread.sleep(25); waitedMs += 25
-            val now = jobCount.get
-            if (now == last) stableMs += 25 else { last = now; stableMs = 0 }
-          }
-          (wall, jobCount.get)
-        } finally {
-          spark.sparkContext.removeSparkListener(jobListener)
-          org.apache.commons.io.FileUtils.deleteDirectory(work.toFile)
-        }
-      }
-      // standing metric: the SHIPPED (fused-probe) step; plus the split
-      // probe as the recorded A/B for the round-17 fusion candidate
-      val (decompWall, decompJobs) = measuredLoop(fused = true, "bench-decomp",
-        (n, s) => phaseTotals(n) = phaseTotals.getOrElse(n, 0.0) + s)
-      val (splitWall, splitJobs) = measuredLoop(fused = false, "bench-decomp-split",
-        (_, _) => ())
-      val jobsPerBatch = r4(decompJobs.toDouble / slices)
+          counters.settle()
+          wall
+        } finally org.apache.commons.io.FileUtils.deleteDirectory(work.toFile)
+      val jobsPerBatch = r4(counters.jobs.get.toDouble / slices)
       val attributed = phaseTotals.values.sum
       val decompJson = (phaseTotals.toSeq :+ ("other" -> (decompWall - attributed)))
         .map { case (n, s) => s"${jsonStr(n)}:${r4(s / slices)}" }
         .mkString(s"""{"loop_sec":${r4(decompWall)},"jobs_per_batch":$jobsPerBatch,""" +
-          s""""split_probe":{"loop_sec":${r4(splitWall)},""" +
-          s""""jobs_per_batch":${r4(splitJobs.toDouble / slices)}},""" +
           """"per_batch":{""", ",", "}}")
       // top-level fields keep the prior rounds' shape (the full-corpus row)
       val (_, bn, bbest, bruns) = rows(1)
@@ -1112,23 +1081,13 @@ object Bench {
       new RestructureBench(() => sys.error("restructure setup failed"), Some(e))
     }
 
-  /** Opt-in (`SPARK_GRAFT_BINS=1`) bin-count scaling row (round-16 verdict
-    * task #5): the standing restructure bench writes ~1.5k bins, but the
-    * write path's design arguments (per-parent mkdirs memo, sidecar sweep
-    * election, fingerprint gating) are amortization claims about TENS of
-    * thousands of bins — so measure them. A synthetic 16-partition topic
-    * with exactly `users × hours` (200 × 100 = 20k) hourly bins, ~20
-    * records each, runs the full job twice: cold write (empty tree) and
-    * append (every bin merge-rewrites), with the per-stage Timer on both
-    * phases. One measured pass per phase — a scaling-trend row, not the
-    * noise-controlled headline.
-    */
   /** Standing object-store-latency point for the bespoke bin readers
     * (round-17 watch item: a task opening hundreds of bins sequentially
     * rebuilds a seconds-scale wall on S3-class ~20-50 ms GETs). N tiny
     * bins re-read through a local FS whose every open sleeps `delay_ms`,
-    * sequential (ahead=0) vs the production bounded open-ahead — the
-    * 50k-bin merge-chunk wall extrapolates linearly from this point.
+    * with the production bounded open-ahead — the 50k-bin merge-chunk wall
+    * extrapolates linearly from this point. The sequential baseline it
+    * replaced measured 3.74× slower (PLANS.md round 18).
     */
   private def benchBinOpenLatency(spark: SparkSession): String =
     try {
@@ -1144,27 +1103,34 @@ object Bench {
         spark.sparkContext.hadoopConfiguration.set("fs.slowopen.impl",
           classOf[SlowOpenLocalFileSystem].getName)
         val rels = (0 until files).map(i => f"bin$i%05d.csv")
-        def run(ahead: Int): Double = {
-          SlowOpenLocalFileSystem.delayMs = delayMs
+        SlowOpenLocalFileSystem.delayMs = delayMs
+        val ahd =
           try {
             val t0 = System.nanoTime()
             val n = graft.jobs.Restructure.readCsvBinFiles(spark, s"slowopen:$dir",
-              "", rels, header, openAhead = ahead).count()
+              "", rels, header).count()
             require(n == files * 2L, s"openlat read $n rows")
             (System.nanoTime() - t0) / 1e9
           } finally SlowOpenLocalFileSystem.delayMs = 0L
-        }
-        val seq = run(0)
-        val ahd = run(graft.jobs.Restructure.BinOpenAheadDefault)
-        s"""{"files":$files,"delay_ms":$delayMs,"seq_sec":${r4(seq)},""" +
-          s""""ahead_sec":${r4(ahd)},"ahead":${graft.jobs.Restructure.BinOpenAheadDefault},""" +
-          s""""speedup":${r4(seq / math.max(ahd, 1e-9))}}"""
+        s"""{"files":$files,"delay_ms":$delayMs,"ahead_sec":${r4(ahd)},""" +
+          s""""ahead":${graft.jobs.Restructure.BinOpenAhead}}"""
       } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     } catch { case e: Throwable =>
       Console.err.println(s"[bench] bin_open_latency FAILED: ${e.getMessage}")
       s"""{"error":${jsonStr(e.toString)}}"""
     }
 
+  /** Opt-in (`SPARK_GRAFT_BINS=1`) bin-count scaling row (round-16 verdict
+    * task #5): the standing restructure bench writes ~1.5k bins, but the
+    * write path's design arguments (per-parent mkdirs memo, sidecar sweep
+    * election, fingerprint gating) are amortization claims about TENS of
+    * thousands of bins — so measure them. A synthetic 16-partition topic
+    * with exactly `users × hours` (200 × 100 = 20k) hourly bins, ~20
+    * records each, runs the full job twice: cold write (empty tree) and
+    * append (every bin merge-rewrites), with the per-stage Timer on both
+    * phases. One measured pass per phase — a scaling-trend row, not the
+    * noise-controlled headline.
+    */
   private def benchBins(spark: SparkSession, dropCachedBlocks: () => Unit): String =
     try {
       val users = 200

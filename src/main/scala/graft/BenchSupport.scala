@@ -4,11 +4,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Shared measurement plumbing for [[Bench]] and [[Profile]] — ONE
-  * implementation of the two pieces both mains need, so a fix to either
-  * (listener drain timing, replication scheme) reaches both and the
-  * Profile decomposition stays comparable to the bench artifact it
-  * explains.
+/** Measurement plumbing for [[Bench]]: the session's job/stage/task
+  * counter listener and the workload-honest corpus replication.
   */
 private[graft] object BenchSupport {
 

@@ -1047,35 +1047,42 @@ object SparkEntry {
     * integers (no float ratios → engine-exact); all row-local array
     * expressions — zero shuffles.
     */
-  private def qRepetition(implicit s: SparkSession, d: String): DataFrame = {
-    // Kernel-based shape (r19; guide §1.2 per-task work). The declarative
-    // form's mode frequency — aggregate(distinct, greatest(acc,
-    // size(filter(ws, ===tok)))) — was O(distinct·n) interpreted HOF work
-    // per document (2.0-2.3 s noop at sf0.1); one graft_elem_counts hash
-    // pass yields the same exact occurrence counts, so the mode is
-    // array_max over the counts. Bigrams likewise: graft_adjacent_pairs is
-    // the identical " "-joined pair list (same kernel the LM family uses),
-    // and n_bigrams = max(n_tokens-1, 0) without materializing the pairs.
-    // All outputs integer-identical; oracle re-proved.
-    val withWs = t("documents").select(col("doc_id"),
-      TextFunctions.words(col("text")).as("ws"))
+  private def qRepetition(implicit s: SparkSession, d: String): DataFrame =
+    repetitionSignals(t("documents").select(col("doc_id"),
+      TextFunctions.words(col("text")).as("ws")), "doc_id")
+      .orderBy(col("doc_id"))
+
+  /** q_repetition's five signals over the token-array column `ws` of
+    * `withWs`, after the `keep` columns. Kernel-based shape (r19; guide
+    * §1.2 per-task work): the declarative mode frequency — aggregate(
+    * distinct, greatest(acc, size(filter(ws, ===tok)))) — was
+    * O(distinct·n) interpreted HOF work per document (2.0-2.3 s noop at
+    * sf0.1); one graft_elem_counts hash pass yields the same exact
+    * occurrence counts, so the mode is array_max over the counts. Bigrams
+    * likewise: graft_adjacent_pairs is the identical " "-joined pair list
+    * (same kernel the LM family uses), and n_bigrams = max(n_tokens-1, 0)
+    * without materializing the pairs. A NULL `ws` yields NULL for all
+    * five, as the declarative form (and the DuckDB oracle) does — the
+    * kernels alone map NULL to an empty array. `RepetitionShapeSpec` pins
+    * values and nullness against the declarative form.
+    */
+  private[graft] def repetitionSignals(withWs: DataFrame, keep: String*): DataFrame = {
     val ws = col("ws")
     val ec = col("__ec")
+    def ifWs(c: Column): Column = when(ws.isNotNull, c)
     withWs
-      .select(col("doc_id"),
-        size(ws).cast(LongType).as("n_tokens"),
-        GraftExpressions.elemCounts(ws).as("__ec"),
-        greatest(size(ws) - 1, lit(0)).cast(LongType).as("n_bigrams"),
-        size(GraftExpressions.elemCounts(
-          GraftExpressions.adjacentPairs(ws))).cast(LongType)
-          .as("n_distinct_bigrams"))
-      .select(col("doc_id"), col("n_tokens"),
-        size(ec).cast(LongType).as("n_distinct_tokens"),
-        when(size(ec) === 0, lit(0L))
-          .otherwise(array_max(transform(ec, e => e.getField("c"))))
-          .as("top_token_freq"),
-        col("n_bigrams"), col("n_distinct_bigrams"))
-      .orderBy(col("doc_id"))
+      .select(keep.map(col) ++ Seq(
+        ifWs(size(ws)).cast(LongType).as("n_tokens"),
+        ifWs(GraftExpressions.elemCounts(ws)).as("__ec"),
+        ifWs(greatest(size(ws) - 1, lit(0))).cast(LongType).as("n_bigrams"),
+        ifWs(size(GraftExpressions.elemCounts(
+          GraftExpressions.adjacentPairs(ws)))).cast(LongType)
+          .as("n_distinct_bigrams")): _*)
+      .select(keep.map(col) ++ Seq(col("n_tokens"),
+        when(ec.isNotNull, size(ec)).cast(LongType).as("n_distinct_tokens"),
+        when(ec.isNotNull, coalesce(array_max(transform(ec, e => e.getField("c"))), lit(0)))
+          .cast(LongType).as("top_token_freq"),
+        col("n_bigrams"), col("n_distinct_bigrams")): _*)
   }
 
   /** Z-order (Morton) clustering key over (user, hour) — the layout

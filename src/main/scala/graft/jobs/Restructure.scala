@@ -576,29 +576,29 @@ object Restructure {
     (frames, failed)
   }
 
-  /** Default bounded open-ahead depth for the bespoke bin readers. */
-  private[graft] val BinOpenAheadDefault = 4
+  /** Bounded open-ahead depth of the bespoke bin readers. */
+  private[graft] val BinOpenAhead = 4
 
   /** Bounded open-AHEAD over one task's bin files: on an object store every
     * open is a ~20-50 ms GET round-trip, and a task opening hundreds of
     * bins sequentially rebuilds a seconds-scale wall at 50k bins (the
     * round-17 watch item — at S3-class ~30 ms/GET, 50k bins across 64
-    * slices is ~23 s of pure open latency). Up to `ahead` opens run on a
-    * small background pool, overlapping the current file's parse; memory
-    * stays bounded (at most `ahead` OPEN streams ahead, no buffered bytes).
-    * The returned iterator yields (relPath, rawStream) with the stream the
-    * CONSUMER's to close; streams still in flight when the task completes
-    * (success, failure, or partial consumption) are closed by a
-    * task-completion listener. `ahead <= 0` degrades to plain sequential
-    * opens (the bench's A/B baseline).
+    * slices is ~23 s of pure open latency). Up to [[BinOpenAhead]] opens
+    * run on a small background pool, overlapping the current file's parse;
+    * memory stays bounded (at most that many OPEN streams ahead, no
+    * buffered bytes). The returned iterator yields (relPath, rawStream)
+    * with the stream the CONSUMER's to close; streams still in flight when
+    * the task completes (success, failure, or partial consumption) are
+    * closed by a task-completion listener. A single file opens directly,
+    * with no pool.
     */
   private def openBinsAhead(pfs: FileSystem, root: String, sfx: String,
-      paths: Array[String], ahead: Int): Iterator[(String, java.io.InputStream)] = {
+      paths: Array[String]): Iterator[(String, java.io.InputStream)] = {
     def openOne(p: String): java.io.InputStream = pfs.open(new HPath(s"$root/$p$sfx"))
-    if (ahead <= 0 || paths.length <= 1)
+    if (paths.length <= 1)
       return paths.iterator.map(p => (p, openOne(p)))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(ahead, 4), (r: Runnable) => {
+      BinOpenAhead, (r: Runnable) => {
         val t = new Thread(r, "graft-bin-open-ahead"); t.setDaemon(true); t
       })
     val futures = new Array[java.util.concurrent.Future[java.io.InputStream]](paths.length)
@@ -629,7 +629,7 @@ object Restructure {
       def hasNext: Boolean = { val h = cursor < paths.length; if (!h) cleanup(); h }
       def next(): (String, java.io.InputStream) = {
         val i = cursor
-        submitUpTo(i + 1 + ahead)
+        submitUpTo(i + 1 + BinOpenAhead)
         // advance BEFORE the blocking get: if the open failed, its slot
         // holds no stream, and cleanup starts from the next in-flight one
         cursor = i + 1
@@ -652,8 +652,7 @@ object Restructure {
     * the merge/quarantine golden e2es.
     */
   private[graft] def readCsvBinFiles(spark: SparkSession, scanRoot: String,
-      suffix: String, members: Seq[String], headerLine: String,
-      openAhead: Int = BinOpenAheadDefault): DataFrame = {
+      suffix: String, members: Seq[String], headerLine: String): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField}
     def settings(): com.univocity.parsers.csv.CsvParserSettings = {
       val s = new com.univocity.parsers.csv.CsvParserSettings
@@ -696,13 +695,12 @@ object Restructure {
       math.min(members.size, spark.sparkContext.defaultParallelism * 2))
     val rootLocal = scanRoot
     val sfx = suffix
-    val aheadLocal = openAhead
     val rdd = spark.sparkContext.parallelize(members, slices).mapPartitions { it =>
       val conf = new org.apache.hadoop.conf.Configuration()
       confEntries.foreach { case (k, v) => conf.set(k, v) }
       val pfs = new HPath(rootLocal).getFileSystem(conf)
       val parser = new com.univocity.parsers.csv.CsvParser(settings())
-      openBinsAhead(pfs, rootLocal, sfx, it.toArray, aheadLocal).flatMap { case (p, raw) =>
+      openBinsAhead(pfs, rootLocal, sfx, it.toArray).flatMap { case (p, raw) =>
         // a corrupt/truncated gzip header throws from the decompressor
         // CONSTRUCTOR — close the raw FS stream on that path too (the
         // finally below only covers streams that reached the reader)
@@ -752,20 +750,18 @@ object Restructure {
     * is the known relative path directly — no input_file_name decode.
     */
   private[jobs] def readJsonBinFiles(spark: SparkSession, scanRoot: String,
-      suffix: String, members: Seq[String], schema: StructType,
-      openAhead: Int = BinOpenAheadDefault): DataFrame = {
+      suffix: String, members: Seq[String], schema: StructType): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField}
     val confEntries = AvroRead.fsConfEntries(spark)
     val slices = math.max(1,
       math.min(members.size, spark.sparkContext.defaultParallelism * 2))
     val rootLocal = scanRoot
     val sfx = suffix
-    val aheadLocal = openAhead
     val rdd = spark.sparkContext.parallelize(members, slices).mapPartitions { it =>
       val conf = new org.apache.hadoop.conf.Configuration()
       confEntries.foreach { case (k, v) => conf.set(k, v) }
       val pfs = new HPath(rootLocal).getFileSystem(conf)
-      openBinsAhead(pfs, rootLocal, sfx, it.toArray, aheadLocal).flatMap { case (p, raw) =>
+      openBinsAhead(pfs, rootLocal, sfx, it.toArray).flatMap { case (p, raw) =>
         val in: java.io.InputStream =
           if (p.endsWith(".gz"))
             try new java.util.zip.GZIPInputStream(raw)

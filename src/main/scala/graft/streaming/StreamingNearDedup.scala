@@ -12,10 +12,10 @@ import graft.operators.TextDedup
   *
   *  1. near-deduped within itself ([[TextDedup.dedupCorpus]] — LSH →
   *     exact-Jaccard verify → connected components, at batch scale);
-  *  2. probed against the accumulated history with the broadcast-batch LSH
-  *     probe ([[TextDedup.minhashCandidatePairsAgainst]] — the history
-  *     side STREAMS through one scan, the batch band table broadcasts;
-  *     never history×history);
+  *  2. probed against the accumulated history with a broadcast-batch LSH
+  *     probe (the history side STREAMS through one row-local scan
+  *     carrying bands and shingle sets, the batch bands and sets
+  *     broadcast; never history×history);
   *  3. candidates exact-verified by shingle Jaccard (integer
   *     cross-multiply, no float compare), matching `dedupCorpus`
   *     semantics across the batch boundary;
@@ -40,6 +40,21 @@ object StreamingNearDedup {
     * query (fresh checkpoint → batch ids restart at 0) must use a
     * different epoch so it cannot clobber an earlier query's partitions —
     * [[run]] derives it from the checkpoint location.
+    *
+    * The step runs with AQE OFF ([[withAqeOff]]): every broadcast in the
+    * probe is explicit, the batch side is bounded by contract, and the
+    * hot-bucket collapse guard (not runtime skew-join) is the in-batch skew
+    * protection, so AQE's only contribution per micro-batch would be one
+    * scheduled job per exchange (PLANS.md round 16: AQE off took the step
+    * from 34.4 to 13.4 jobs/batch).
+    *
+    * The history probe is FUSED: the history side computes bands AND
+    * shingle sets row-locally in one codegen'd scan (no signature groupBy
+    * exchange, no second shingle-set scan) against two explicit batch-side
+    * broadcasts. A pair matching on several bands verifies once per
+    * matching band; the trailing distinct absorbs it (PLANS.md round 18:
+    * 10.0 jobs/batch against 10.9 for the split two-scan probe it
+    * replaced, loop wall −16%).
     */
   def dedupBatch(batch: DataFrame, batchId: Long, historyDir: String,
       idCol: String = "doc_id", textCol: String = "text",
@@ -49,29 +64,7 @@ object StreamingNearDedup {
       // per-phase wall-time sink (phase name, seconds) for floor
       // attribution — a plain callback so the bench decomposes the SHIPPED
       // step instead of a re-implementation; no-op (and no cost) by default
-      phaseSink: (String, Double) => Unit = (_, _) => (),
-      // AQE OFF by default for the step's plans: every broadcast in the
-      // probe is EXPLICIT, the batch side is bounded by contract, and the
-      // hot-bucket collapse guard (not runtime skew-join) is the in-batch
-      // skew protection — so AQE's only contribution per micro-batch is
-      // one scheduled JOB PER EXCHANGE, and the per-job scheduling floor
-      // is the measured per-batch bottleneck (round-15 decomposition:
-      // ~33 jobs × ~55 ms). Measured with the floor harness: 34.4 →
-      // 13.4 jobs/batch and -36% full-corpus loop wall. Pass true to
-      // re-enable (e.g. outsized non-contract batches on a skewed corpus).
-      adaptive: Boolean = false,
-      // FUSED history probe (default): the history side computes bands AND
-      // shingle sets row-locally in ONE codegen'd scan (no signature
-      // groupBy exchange, no second hSets scan) against two explicit
-      // batch-side broadcasts — dropping the round-17 inventory's `cands`
-      // broadcast job, which executed the whole history band scan inside a
-      // broadcast exchange. Candidates are identical by construction
-      // (bandTableOfSetsLocal ≡ bandTableOfSets, spec-pinned); a pair
-      // matching on multiple bands verifies per matching band instead of
-      // once, and the trailing distinct absorbs it. `false` keeps the
-      // split probe for A/B (the bench's floor decomposition measures
-      // both).
-      fusedProbe: Boolean = true): DataFrame = withAdaptive(batch.sparkSession, adaptive) {
+      phaseSink: (String, Double) => Unit = (_, _) => ()): DataFrame = withAqeOff(batch.sparkSession) {
     def phase[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
@@ -109,9 +102,9 @@ object StreamingNearDedup {
           dataSchema = Some(rows.schema)))
       val survivors = history match {
         case None => kept
-        case Some(h) if fusedProbe =>
-          // the same bounded-batch contract the split probe enforced
-          // inside minhashCandidatePairsAgainst
+        case Some(h) =>
+          // bounded-batch contract: an oversized batch fails fast, naming
+          // the alternative, before any broadcast
           graft.operators.Similarity.requireProbeBatch(kept,
             graft.operators.Similarity.MaxProbeBatchRows, "probe batch",
             "for large batches run minhashCandidatePairs over the combined " +
@@ -126,7 +119,7 @@ object StreamingNearDedup {
           // history: ONE row-local scan carrying bands + shingle set —
           // stream-side width never shuffles; it is generated and consumed
           // within the same pipelined stage. No signature groupBy
-          // exchange, no second hSets scan, no `cands` broadcast job.
+          // exchange and no second history scan.
           val hProbe = TextDedup.bandTableOfSetsLocal(
             TextDedup.distinctShingleSets(h, idCol, textCol, shingleN),
             idCol, k, bands, rowsPerBand, carryCols = Seq("__sh"))
@@ -139,22 +132,6 @@ object StreamingNearDedup {
             .join(broadcast(bSets), col("__pbid") === col("__bid"))
             .filter(inter * den >= union * num) // jaccard ≥ num/den, exact
             .select(col("__bid").as(idCol)).distinct()
-          kept.join(dupIds, Seq(idCol), "left_anti")
-        case Some(h) =>
-          val cands = TextDedup.minhashCandidatePairsAgainst(
-            h, kept, idCol, textCol, shingleN, k, bands, rowsPerBand)
-          // candidate ids are bounded by |batch| × matches — the small
-          // side; history shingle sets are computed only for candidates
-          val hSets = TextDedup.distinctShingleSets(h, idCol, textCol, shingleN)
-            .withColumnRenamed(idCol, "__hid").withColumnRenamed("__sh", "__hsh")
-          val bSets = TextDedup.distinctShingleSets(kept, idCol, textCol, shingleN)
-            .withColumnRenamed(idCol, "__bid").withColumnRenamed("__sh", "__bsh")
-          val (inter, union) = TextDedup.jaccardCounts(col("__hsh"), col("__bsh"))
-          val dupIds = hSets
-            .join(broadcast(cands), col("__hid") === col("history_id"))
-            .join(broadcast(bSets), col("batch_id") === col("__bid"))
-            .filter(inter * den >= union * num) // jaccard ≥ num/den, exact
-            .select(col("batch_id").as(idCol)).distinct()
           kept.join(dupIds, Seq(idCol), "left_anti")
       }
 
@@ -196,10 +173,7 @@ object StreamingNearDedup {
   def dedupEmbeddingBatch(batch: DataFrame, batchId: Long, historyDir: String,
       threshold: Double = 0.95, idCol: String = "vec_id",
       vecCol: String = "embedding", epoch: String = "b",
-      compactEvery: Int = 16, ttlBatches: Long = 0L,
-      // see dedupBatch: the step's plans are broadcast-explicit and
-      // bounded, so AQE only adds a scheduled job per exchange here
-      adaptive: Boolean = false): DataFrame = withAdaptive(batch.sparkSession, adaptive) {
+      compactEvery: Int = 16, ttlBatches: Long = 0L): DataFrame = withAqeOff(batch.sparkSession) {
     import graft.operators.Similarity
     val partitionKey = s"$epoch-$batchId"
     val spark = batch.sparkSession
@@ -330,104 +304,43 @@ object StreamingNearDedup {
       .start()
   }
 
-  /** Per-session reference count for the AQE override: `depth` concurrent
-    * steps requesting the SAME value share one set/restore pair; a step
-    * requesting the OPPOSITE value waits until the holders drain. Weak keys
-    * so the map never pins a SparkSession.
+  /** Per-session reference count for the AQE-off override: concurrent
+    * steps on one session share one set/restore pair. Weak keys so the map
+    * never pins a SparkSession.
     */
   private final class AqGuard {
     var depth = 0
-    var value: String = _
     var prev: String = _
-    // threads blocked wanting a DIFFERENT value than the current holders':
-    // while any are queued, new same-value entrants must also wait (no
-    // barging); at drain the opposed value is recorded as next-admitted
-    // (`handoff`), so same-value waiters re-block until an opposed-value
-    // step has entered — the handoff is DETERMINISTIC, not a notifyAll
-    // race the opposed waiter could lose to every same-value waiter under
-    // continuously overlapping steps
-    var opposedWaiters = 0
-    // the value opposed waiters want (binary conf: all concurrently-opposed
-    // waiters necessarily agree)
-    var opposedWant: String = _
-    // set at drain while opposed waiters are queued: only a step wanting
-    // THIS value may become the next holder. Cleared by that step on entry,
-    // or by the last opposed waiter leaving the queue (interrupt path —
-    // the same monitor hold that decrements the count to zero, so threads
-    // blocked solely on the stale handoff are always released)
-    var handoff: String = null
   }
   private val aqGuards: java.util.Map[SparkSession, AqGuard] =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, AqGuard]())
 
-  /** Toggle AQE around a synchronous step, restoring the previous value.
+  /** Run a synchronous step with AQE off, restoring the previous value.
     * The step's returned frames are MATERIALIZED inside (localCheckpoint +
     * parquet commit), so nothing escapes that would execute under the
     * restored conf. Session-scoped by nature: an unrelated interactive
     * query on the same session during a step sees the override. Concurrent
     * STEPS on one session (e.g. a text `run` and an embedding
     * `runEmbedding` stream sharing a session — each stream's own
-    * foreachBatch is serial, but two streams are not) are safe: same-value
-    * steps share one reference-counted set/restore (no mid-step restore
-    * from a sibling's finally), and an opposite-value step blocks until
-    * the current holders finish rather than flipping the conf under them —
-    * with no barging AND a deterministic handoff: while an opposite-value
-    * step is queued, new same-value entrants wait too, and when the
-    * holders drain the opposed value is recorded as next-admitted, so the
-    * opposed step cannot lose the monitor-reacquisition race to queued
-    * same-value waiters either — continuously-overlapping same-value
-    * steps are held until an opposed step has entered.
+    * foreachBatch is serial, but two streams are not) share one
+    * reference-counted override: the first step in turns AQE off, the last
+    * one out restores, so no step sees a sibling's restore mid-flight.
     */
-  private[streaming] def withAdaptive[T](spark: SparkSession, enabled: Boolean)(f: => T): T = {
+  private[streaming] def withAqeOff[T](spark: SparkSession)(f: => T): T = {
     val key = "spark.sql.adaptive.enabled"
-    val want = enabled.toString
     val g = aqGuards.computeIfAbsent(spark, _ => new AqGuard)
     g.synchronized {
-      // re-evaluate opposition each round: the holder value can flip while
-      // queued (the monitor is held between decrement and re-registration,
-      // so the count never flickers visibly to other threads)
-      while ((g.depth > 0 && (g.value != want || g.opposedWaiters > 0)) ||
-             (g.depth == 0 && g.handoff != null && g.handoff != want)) {
-        val opposedNow = g.depth > 0 && g.value != want
-        if (opposedNow) { g.opposedWaiters += 1; g.opposedWant = want }
-        try g.wait()
-        finally if (opposedNow) {
-          g.opposedWaiters -= 1
-          // last opposed waiter leaving the queue: on the normal wake it
-          // proceeds to take the slot under THIS same monitor hold (the
-          // loop re-check and entry run before the monitor is released),
-          // so clearing the handoff here is safe — and on the interrupt
-          // path it is REQUIRED, releasing entrants blocked solely on the
-          // no-barge count or a handoff nobody will ever claim
-          if (g.opposedWaiters == 0) {
-            g.handoff = null
-            g.notifyAll()
-          }
-        }
-      }
       if (g.depth == 0) {
-        // claiming a handoff addressed to this value admits this thread as
-        // the opposed step the drain promised the slot to (or an equivalent
-        // same-value entrant — indistinguishable to the conf)
-        if (g.handoff == want) g.handoff = null
         g.prev = spark.conf.get(key, "true")
-        g.value = want
-        if (!g.prev.equalsIgnoreCase(want)) spark.conf.set(key, want)
+        if (!g.prev.equalsIgnoreCase("false")) spark.conf.set(key, "false")
       }
       g.depth += 1
     }
     try f
     finally g.synchronized {
       g.depth -= 1
-      if (g.depth == 0) {
-        if (!g.prev.equalsIgnoreCase(g.value)) spark.conf.set(key, g.prev)
-        // deterministic no-barge handoff: with opposed waiters queued, only
-        // a step wanting their value may enter next — queued same-value
-        // waiters that win the notifyAll race re-block on the handoff
-        if (g.opposedWaiters > 0) g.handoff = g.opposedWant
-        g.notifyAll()
-      }
+      if (g.depth == 0 && !g.prev.equalsIgnoreCase("false")) spark.conf.set(key, g.prev)
     }
   }
 

@@ -5,29 +5,31 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 
-import graft.functions.GraftExpressions
-
-/** q_repetition's r19 kernel shape ≡ the declarative formulation it
-  * replaced: the mode frequency (aggregate over the distinct set, re-
-  * filtering the token list per distinct token — O(distinct·n)) must equal
-  * `array_max` over graft_elem_counts counts; the bigram count must equal
-  * `greatest(n-1, 0)` of the materialized bigram list; and the distinct-
-  * bigram count via elemCounts(adjacentPairs) must equal
-  * `size(array_distinct(bigrams))`. These identities carry the oracle-
-  * checked query, so they are pinned on arbitrary token lists (repeats,
-  * empties, single tokens).
+/** q_repetition's r19 kernel shape ([[SparkEntry.repetitionSignals]]) ≡
+  * the declarative formulation it replaced: the mode frequency (aggregate
+  * over the distinct set, re-filtering the token list per distinct token —
+  * O(distinct·n)) must equal `array_max` over graft_elem_counts counts;
+  * the bigram count must equal `greatest(n-1, 0)` of the materialized
+  * bigram list; and the distinct-bigram count via
+  * elemCounts(adjacentPairs) must equal `size(array_distinct(bigrams))`.
+  * These identities carry the oracle-checked query, so they are pinned on
+  * arbitrary token lists (repeats, empties, single tokens) — and on NULL
+  * lists, where every signal must be NULL on both sides, as in the DuckDB
+  * oracle.
   */
 class RepetitionShapeSpec extends SparkSpec {
   import spark.implicits._
 
   // small alphabet → heavy repetition, the regime the mode frequency is for
   private val tokGen: Gen[String] = Gen.oneOf("a", "b", "c", "dd", "", "x y")
-  private val arrGen: Gen[List[String]] =
-    Gen.chooseNum(0, 40).flatMap(n => Gen.listOfN(n, tokGen))
+  private val arrGen: Gen[Option[List[String]]] = Gen.frequency(
+    1 -> Gen.const(None),
+    6 -> Gen.chooseNum(0, 40).flatMap(n => Gen.listOfN(n, tokGen)).map(Some(_)))
 
   test("property: kernel repetition signals ≡ declarative on any token list") {
+    // always at least one NULL list, whatever the generator draws
     val prop = Prop.forAll(Gen.listOfN(8, arrGen)) { arrs =>
-      val df = arrs.map(Tuple1(_)).toDF("ws")
+      val df = (None +: arrs).map(Tuple1(_)).toDF("ws")
         .select(col("ws").cast("array<string>").as("ws"))
       val ws = col("ws")
       // declarative references (the pre-r19 expressions, verbatim)
@@ -36,25 +38,23 @@ class RepetitionShapeSpec extends SparkSpec {
           i => concat(element_at(ws, i + 1), lit(" "), element_at(ws, i + 2))))
       val topFreqDecl = aggregate(array_distinct(ws), lit(0),
         (acc, tok) => greatest(acc, size(filter(ws, w => w === tok))))
-      val ec = col("__ec")
-      val got = df
-        .select(ws, GraftExpressions.elemCounts(ws).as("__ec"),
-          GraftExpressions.elemCounts(GraftExpressions.adjacentPairs(ws)).as("__bec"),
-          bg.as("__bg"))
-        .select(
-          size(col("__ec")).cast(LongType).as("k_distinct"),
-          size(array_distinct(ws)).cast(LongType).as("d_distinct"),
-          when(size(ec) === 0, lit(0L))
-            .otherwise(array_max(transform(ec, e => e.getField("c")))).as("k_top"),
-          topFreqDecl.cast(LongType).as("d_top"),
-          greatest(size(ws) - 1, lit(0)).cast(LongType).as("k_nbg"),
-          size(col("__bg")).cast(LongType).as("d_nbg"),
-          size(col("__bec")).cast(LongType).as("k_dbg"),
-          size(array_distinct(col("__bg"))).cast(LongType).as("d_dbg"))
+      val decl = df.select(ws,
+        size(ws).cast(LongType).as("d_tokens"),
+        size(array_distinct(ws)).cast(LongType).as("d_distinct"),
+        topFreqDecl.cast(LongType).as("d_top"),
+        size(bg).cast(LongType).as("d_nbg"),
+        size(array_distinct(bg)).cast(LongType).as("d_dbg"))
+      val pairs = Seq("n_tokens" -> "d_tokens", "n_distinct_tokens" -> "d_distinct",
+        "top_token_freq" -> "d_top", "n_bigrams" -> "d_nbg",
+        "n_distinct_bigrams" -> "d_dbg")
+      val got = SparkEntry.repetitionSignals(decl, "ws" +: pairs.map(_._2): _*)
         .collect()
       got.forall { r =>
-        val ok = r.getLong(0) == r.getLong(1) && r.getLong(2) == r.getLong(3) &&
-          r.getLong(4) == r.getLong(5) && r.getLong(6) == r.getLong(7)
+        val ok = pairs.forall { case (k, d) =>
+          val kv = r.get(r.fieldIndex(k))
+          val dv = r.get(r.fieldIndex(d))
+          kv == dv && (kv != null || r.isNullAt(r.fieldIndex("ws")))
+        }
         if (!ok) Console.err.println(s"[repetition-fuzz] row=$r")
         ok
       }

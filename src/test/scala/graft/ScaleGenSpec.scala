@@ -5,9 +5,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Unit coverage for the native scale-factor generator (the bench's
-  * sf1_native section and GenNative both build on it; the heavy-subset
-  * oracle run validates VALUES — this pins the structural invariants at a
-  * tiny ratio so `sbt test` guards the generator itself).
+  * sf1_native section and `runMain graft.ScaleGen` both build on it; the
+  * heavy-subset oracle run validates VALUES — this pins the structural
+  * invariants at a tiny ratio so `sbt test` guards the generator itself).
   */
 class ScaleGenSpec extends SparkSpec {
 

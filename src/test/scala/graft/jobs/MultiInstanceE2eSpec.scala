@@ -17,7 +17,7 @@ import graft.SparkSpec
   * interleaving: the topic extracts exactly once (lock-skip, or
   * coverage-skip after the under-lock ledger refresh), output is
   * byte-exact with no duplicated rows, and the ledger lands the exact
-  * merged interval. Plus the mid-run-failure handoff: a replica that dies
+  * merged interval. Plus the mid-run-failure takeover: a replica that dies
   * inside topic processing releases its lock and commits nothing, and the
   * next replica replays cleanly.
   */
@@ -202,7 +202,7 @@ class MultiInstanceE2eSpec extends SparkSpec {
     assert(!Files.exists(lockFile), "re-serialized flush did not release")
   }
 
-  test("mid-run failure: lock released for handoff, nothing ledger-committed, next instance replays") {
+  test("mid-run failure: lock released for takeover, nothing ledger-committed, next instance replays") {
     val work = Files.createTempDirectory("graft-multi-fail")
     val in = work.resolve("in"); val out = work.resolve("out")
     // a corrupt Avro object with a valid ingestion filename: the replica
@@ -214,7 +214,7 @@ class MultiInstanceE2eSpec extends SparkSpec {
     val failed = Restructure.run(spark, c)
     assert(failed.failedTopics.map(_._1) == Seq(topic))
     assert(!failed.ledger.contains(topic, 1, 18, 20, java.time.Instant.EPOCH))
-    // clean handoff: the lock file is gone despite the failure
+    // clean takeover: the lock file is gone despite the failure
     val locks = out.resolve("_locks")
     val left =
       if (Files.isDirectory(locks))

@@ -5,12 +5,12 @@ import java.nio.file.Files
 import graft.SparkSpec
 
 /** The bin readers' bounded open-ahead (round-18: object-store per-open
-  * latency) must be a pure performance change: identical rows to the
-  * sequential path, correct behavior under injected per-open latency
-  * (through [[graft.SlowOpenLocalFileSystem]], the bench's stand-in), and
-  * no hang or stream leak when the consumer stops early (limit) or a file
-  * in the middle is unreadable. The latency WALL itself is measured by the
-  * bench's standing `bin_open_latency` A/B section, not asserted here.
+  * latency) must be a pure performance change: exactly the rows the bins
+  * hold, correct behavior under injected per-open latency (through
+  * [[graft.SlowOpenLocalFileSystem]], the bench's stand-in), and no hang
+  * or stream leak when the consumer stops early (limit) or a file in the
+  * middle is unreadable. The latency WALL itself is measured by the
+  * bench's standing `bin_open_latency` section, not asserted here.
   */
 class OpenAheadSpec extends SparkSpec {
 
@@ -25,19 +25,18 @@ class OpenAheadSpec extends SparkSpec {
     (dir, (0 until n).map(i => f"bin$i%04d.csv"))
   }
 
-  test("open-ahead yields exactly the sequential path's rows, with injected per-open latency") {
+  test("open-ahead yields exactly the written rows, with injected per-open latency") {
     val (dir, rels) = mkBins(150)
     spark.sparkContext.hadoopConfiguration.set("fs.slowopen.impl",
       classOf[graft.SlowOpenLocalFileSystem].getName)
     graft.SlowOpenLocalFileSystem.delayMs = 2L
     try {
-      val seq = Restructure.readCsvBinFiles(spark, s"slowopen:$dir", "", rels,
-        header, openAhead = 0).collect().map(_.toString).sorted.toSeq
-      val ahd = Restructure.readCsvBinFiles(spark, s"slowopen:$dir", "", rels,
-        header, openAhead = Restructure.BinOpenAheadDefault)
-        .collect().map(_.toString).sorted.toSeq
-      assert(seq.size == 300)
-      assert(ahd == seq)
+      val got = Restructure.readCsvBinFiles(spark, s"slowopen:$dir", "", rels, header)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sorted.toSeq
+      val want = rels.zipWithIndex.flatMap { case (p, i) =>
+        Seq((i.toString, s"x$i", p), ((i + 1).toString, s"y$i", p))
+      }.sorted
+      assert(got == want)
     } finally graft.SlowOpenLocalFileSystem.delayMs = 0L
   }
 
@@ -51,10 +50,11 @@ class OpenAheadSpec extends SparkSpec {
   test("an unreadable file mid-stream fails the read cleanly (no hang), sequential and ahead") {
     val (dir, rels) = mkBins(40)
     Files.delete(dir.resolve("bin0020.csv"))
-    for (ahead <- Seq(0, Restructure.BinOpenAheadDefault)) {
+    // the whole list opens ahead; the missing file alone takes the
+    // single-file sequential open
+    for (members <- Seq(rels, Seq("bin0020.csv"))) {
       val e = intercept[org.apache.spark.SparkException] {
-        Restructure.readCsvBinFiles(spark, dir.toString, "", rels, header,
-          openAhead = ahead).count()
+        Restructure.readCsvBinFiles(spark, dir.toString, "", members, header).count()
       }
       assert(e.getMessage != null)
     }

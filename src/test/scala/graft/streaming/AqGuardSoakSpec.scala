@@ -4,25 +4,23 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import graft.SparkSpec
 
-/** Randomized soak of [[StreamingNearDedup.withAdaptive]]'s hand-rolled
-  * wait/notify guard (round-16 verdict task #3): the four deterministic
-  * interleavings in StreamingSpec pin the no-barge and handoff rules, but
-  * cannot cover the schedule space of reference counts + opposition queue +
-  * handoff + interrupts. N threads × seeded-random values × random
-  * hold-times × injected interrupts, asserting:
-  *  - the conf INVARIANT at every step: inside a step's body the session
-  *    conf equals the step's requested value, at entry and after the hold
-  *    (a torn restore or a barged flip would break it);
+/** Randomized soak of [[StreamingNearDedup.withAqeOff]]'s per-session
+  * reference count (round-16 verdict task #3): the deterministic
+  * interleaving in StreamingSpec pins the shared override, but cannot
+  * cover the schedule space of overlapping entries and exits + interrupts.
+  * N threads × random hold-times × injected interrupts, asserting:
+  *  - the conf INVARIANT at every step: inside a step's body AQE is off,
+  *    at entry and after the hold (a torn restore by a sibling's exit
+  *    would break it);
   *  - EVENTUAL PROGRESS: every worker drains its full iteration budget
-  *    within the bound (a lost wakeup, orphaned handoff, or starved
-  *    opposed waiter would hang here);
+  *    within the bound;
   *  - CLEAN RESTORE: after the last step the conf is back to the
   *    pre-soak value and a fresh single-threaded step still works.
   * Seeded and time-bounded, so a failure is replayable.
   */
 class AqGuardSoakSpec extends SparkSpec {
 
-  test("withAdaptive soak: random values/holds/interrupts — invariant holds, all threads drain, conf restored") {
+  test("withAqeOff soak: random holds/interrupts — invariant holds, all threads drain, conf restored") {
     val key = "spark.sql.adaptive.enabled"
     val orig = spark.conf.get(key, "true")
     val workers = 10
@@ -39,18 +37,17 @@ class AqGuardSoakSpec extends SparkSpec {
           val rnd = new java.util.Random(seed + w)
           var i = 0
           while (i < iters) {
-            val want = rnd.nextBoolean()
             try {
-              StreamingNearDedup.withAdaptive(spark, enabled = want) {
-                if (spark.conf.get(key) != want.toString) violations.incrementAndGet()
+              StreamingNearDedup.withAqeOff(spark) {
+                if (spark.conf.get(key) != "false") violations.incrementAndGet()
                 val hold = rnd.nextInt(3)
                 if (hold > 0) Thread.sleep(hold)
-                if (spark.conf.get(key) != want.toString) violations.incrementAndGet()
+                if (spark.conf.get(key) != "false") violations.incrementAndGet()
               }
               completed.incrementAndGet()
             } catch {
-              // injected interrupt surfaced from g.wait() or the hold's
-              // sleep: the step aborted, the guard must have unwound
+              // injected interrupt surfaced from the hold's sleep: the
+              // step aborted, the guard must have unwound
               // cleanly (the invariant/progress/restore assertions below
               // are what prove it) — count and continue
               case _: InterruptedException => interrupted.incrementAndGet()
@@ -61,9 +58,8 @@ class AqGuardSoakSpec extends SparkSpec {
       }
       threads.foreach(_.start())
       // chaos: bounded random interrupts while the workers churn — hits
-      // waiters (InterruptedException out of g.wait, exercising the
-      // opposed-count/handoff cleanup), holders mid-sleep, and threads at
-      // arbitrary points between (flag-only, thrown at their next wait)
+      // holders mid-sleep (exercising the exit path's restore) and threads
+      // at arbitrary points between (flag-only, thrown at their next sleep)
       val chaosRnd = new java.util.Random(seed * 31)
       val chaos = new Thread(() => {
         var n = 0
@@ -75,16 +71,16 @@ class AqGuardSoakSpec extends SparkSpec {
       }, "aq-soak-chaos")
       chaos.start()
       // eventual progress: the whole soak is a few seconds of work; a
-      // minute means a lost wakeup or starved waiter
+      // minute means a step is stuck
       val deadline = System.currentTimeMillis() + 120000L
       threads.foreach { t =>
         t.join(math.max(1L, deadline - System.currentTimeMillis()))
-        assert(!t.isAlive, s"worker ${t.getName} failed to drain: lost wakeup or starvation")
+        assert(!t.isAlive, s"worker ${t.getName} failed to drain")
       }
       stopChaos.set(true)
       chaos.join(10000)
       assert(violations.get == 0,
-        s"${violations.get} conf-invariant violations (value flipped under a holder)")
+        s"${violations.get} conf-invariant violations (AQE restored under a holder)")
       assert(completed.get + interrupted.get == workers * iters,
         s"accounting: ${completed.get} + ${interrupted.get} != ${workers * iters}")
       // the interrupts must not have eaten the whole soak: most steps ran
@@ -93,7 +89,7 @@ class AqGuardSoakSpec extends SparkSpec {
       // clean restore + guard still functional single-threaded
       assert(spark.conf.get(key) == "true", "conf not restored after the soak")
       Thread.interrupted() // clear any stray flag on the test thread
-      StreamingNearDedup.withAdaptive(spark, enabled = false) {
+      StreamingNearDedup.withAqeOff(spark) {
         assert(spark.conf.get(key) == "false")
       }
       assert(spark.conf.get(key) == "true")

@@ -163,8 +163,8 @@ class StreamingSpec extends SparkSpec {
     assert(historyIds == Set(1L, 3L, 5L, 8L)) // 7 near-dups history 1
   }
 
-  test("fused probe ≡ split probe survivors; oversized batch fails fast on the fused guard") {
-    val work = Files.createTempDirectory("graft-fusedab")
+  test("history probe survivors; oversized batch fails fast on the probe guard") {
+    val work = Files.createTempDirectory("graft-probe")
     val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods tonight"
     val b0 = Seq(
       (1L, base), (2L, base + " ok"),
@@ -175,26 +175,21 @@ class StreamingSpec extends SparkSpec {
       (5L, "novel text with entirely fresh tokens nothing shared with previous documents at all"),
       (6L, "novel text with entirely fresh tokens nothing shared with previous documents at all really")
     ).toDF("doc_id", "text")
-    // the two probe forms must agree batch for batch — the fused path's
-    // candidates are identical by construction (bandTableOfSetsLocal ≡
-    // the agg band table) and the verify filter is shared
-    val survivors = Seq(true, false).map { fused =>
-      val dir = work.resolve(s"h-$fused").toString
-      Seq(b0, b1).zipWithIndex.map { case (b, i) =>
-        StreamingNearDedup.dedupBatch(b, i.toLong, dir, fusedProbe = fused)
-          .select("doc_id").collect().map(_.getLong(0)).toSet
-      }
+    // batch 0: 2 near-dups 1 in-batch; batch 1: 4 near-dups history doc 1
+    // (the probe) and 6 near-dups 5 in-batch
+    val dir = work.resolve("h").toString
+    val survivors = Seq(b0, b1).zipWithIndex.map { case (b, i) =>
+      StreamingNearDedup.dedupBatch(b, i.toLong, dir)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
     }
-    assert(survivors(0) == survivors(1),
-      s"fused ${survivors(0)} != split ${survivors(1)}")
-    assert(survivors(0) == Seq(Set(1L, 3L), Set(5L)))
-    // the fused path keeps the split path's bounded-batch contract: an
-    // over-cap batch fails fast naming the alternative, not mid-broadcast
+    assert(survivors == Seq(Set(1L, 3L), Set(5L)))
+    // bounded-batch contract: an over-cap batch fails fast naming the
+    // alternative, not mid-broadcast
     val big = spark.range(graft.operators.Similarity.MaxProbeBatchRows + 1L)
       .select(col("id").as("doc_id"),
         concat(lit("tok"), col("id")).as("text"))
     val e = intercept[IllegalArgumentException] {
-      StreamingNearDedup.dedupBatch(big, 2L, work.resolve("h-true").toString)
+      StreamingNearDedup.dedupBatch(big, 2L, dir)
     }
     assert(e.getMessage.contains("probe batch") &&
       e.getMessage.contains("minhashCandidatePairs"), e.getMessage)
@@ -278,7 +273,7 @@ class StreamingSpec extends SparkSpec {
     assert(Files.readAllLines(bin).size == afterFirst.size + 1) // +1 data row per user bin
   }
 
-  test("withAdaptive: concurrent same-value steps share one override; opposite value waits; conf restored") {
+  test("withAqeOff: concurrent steps share one override; first exit does not restore; conf restored") {
     val key = "spark.sql.adaptive.enabled"
     val orig = spark.conf.get(key, "true")
     try {
@@ -286,56 +281,26 @@ class StreamingSpec extends SparkSpec {
       val inA = new java.util.concurrent.CountDownLatch(1)
       val releaseA = new java.util.concurrent.CountDownLatch(1)
       val bSawFalse = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val cRanAfterA = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val aDone = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val entryOrder = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val a = new Thread(() => StreamingNearDedup.withAdaptive(spark, enabled = false) {
+      val a = new Thread(() => StreamingNearDedup.withAqeOff(spark) {
         inA.countDown()
         releaseA.await(10, java.util.concurrent.TimeUnit.SECONDS)
-        aDone.set(true)
       })
       a.start()
       assert(inA.await(10, java.util.concurrent.TimeUnit.SECONDS))
-      // B wants the SAME value while A holds it: must run immediately,
-      // and A's eventual exit must NOT flip the conf back mid-B — but here
-      // B finishes first, and the conf must STAY false (A still holds it)
-      val b = new Thread(() => StreamingNearDedup.withAdaptive(spark, enabled = false) {
+      // B enters while A holds the override: it must run immediately
+      // (A is parked until released, so a B that waited would time out
+      // the join) and see AQE off; B exits first, and the conf must STAY
+      // off because A still holds it
+      val b = new Thread(() => StreamingNearDedup.withAqeOff(spark) {
         bSawFalse.set(spark.conf.get(key) == "false")
       })
       b.start(); b.join(10000)
-      assert(bSawFalse.get, "same-value concurrent step must see the override")
+      assert(!b.isAlive && bSawFalse.get, "a concurrent step must enter at once and see the override")
       assert(spark.conf.get(key) == "false",
-        "first-exiting same-value holder must not restore while a sibling holds")
-      // C wants the OPPOSITE value: must block until A drains
-      val c = new Thread(() => StreamingNearDedup.withAdaptive(spark, enabled = true) {
-        entryOrder.add("c")
-        cRanAfterA.set(aDone.get && spark.conf.get(key) == "true")
-      })
-      c.start()
-      Thread.sleep(200)
-      assert(c.isAlive, "opposite-value step must wait for the current holders")
-      // D wants the SAME value as the holder A — but with C queued it must
-      // wait too (no barging), or overlapping same-value steps could
-      // starve C forever
-      val dRan = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val d = new Thread(() => StreamingNearDedup.withAdaptive(spark, enabled = false) {
-        entryOrder.add("d")
-        dRan.set(spark.conf.get(key) == "false")
-      })
-      d.start()
-      Thread.sleep(200)
-      assert(d.isAlive && !dRan.get,
-        "same-value entrant must not barge past a queued opposite-value waiter")
+        "first-exiting holder must not restore while a sibling holds")
       releaseA.countDown()
-      a.join(10000); c.join(10000); d.join(10000)
-      assert(cRanAfterA.get, "opposite-value step must run after the holder exits, under its own value")
-      assert(dRan.get, "the deferred same-value step must still run, under its value")
-      // DETERMINISTIC handoff: at A's drain the opposed value is recorded
-      // as next-admitted, so C cannot lose the monitor-reacquisition race
-      // to the queued same-value D — not just "C eventually runs" but "C
-      // runs FIRST", every schedule
-      assert(entryOrder.toArray.toSeq == Seq("c", "d"),
-        s"drain must hand off to the opposed waiter first: $entryOrder")
+      a.join(10000)
+      assert(!a.isAlive)
       assert(spark.conf.get(key) == "true", "conf must be restored after all steps")
     } finally spark.conf.set(key, orig)
   }
