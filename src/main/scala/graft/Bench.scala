@@ -896,11 +896,9 @@ object Bench {
         graft.jobs.Restructure.run(spark, cfg) // setup, untimed
         dropCachedBlocks(); System.gc() // untimed debt reclaim (see benchTenX)
         graft.util.Timer.reset()
-        graft.util.Timer.enabled = true
         val t0 = System.nanoTime()
         val result = graft.jobs.Cleaner.run(spark, cfg, ageMs = 0L)
         val sec = (System.nanoTime() - t0) / 1e9
-        graft.util.Timer.enabled = false
         val timerJson = graft.util.Timer.toJson
         org.apache.commons.io.FileUtils.deleteDirectory(work.toFile)
         (sec, result.deleted.size, result.rolledBack.size, timerJson)
@@ -1055,11 +1053,9 @@ object Bench {
         // phase 1: cold write (empty output tree)
         writeBatchTo(work, perPart, rows1)
         graft.util.Timer.reset()
-        graft.util.Timer.enabled = true
         val t0 = System.nanoTime()
         val result = graft.jobs.Restructure.run(spark, cfg)
         val sec = (System.nanoTime() - t0) / 1e9
-        graft.util.Timer.enabled = false
         val timerJson = graft.util.Timer.toJson
         // phase 2: steady-state append — new slices land in EXISTING bins,
         // exercising the merge-rewrite + dedup path over the full bin set
@@ -1183,11 +1179,9 @@ object Bench {
       def timedRun(): (Double, Long, Int, String) = {
         dropCachedBlocks(); System.gc()
         graft.util.Timer.reset()
-        graft.util.Timer.enabled = true
         val t0 = System.nanoTime()
         val result = graft.jobs.Restructure.run(spark, cfg)
         val sec = (System.nanoTime() - t0) / 1e9
-        graft.util.Timer.enabled = false
         (sec, result.processedTopics.map(_.records).sum,
           result.processedTopics.map(_.bins.count).sum.toInt, graft.util.Timer.toJson)
       }
@@ -1288,11 +1282,10 @@ object Bench {
           dedup = true, timeBinFormat = "yyyyMMdd")
         graft.jobs.Restructure.run(spark, ccfg) // setup, untimed
         dropCachedBlocks(); System.gc() // untimed debt reclaim (see benchTenX)
-        graft.util.Timer.reset(); graft.util.Timer.enabled = true
+        graft.util.Timer.reset()
         val ct0 = System.nanoTime()
         val cres = graft.jobs.Cleaner.run(spark, ccfg, ageMs = 0L)
         val csec = (System.nanoTime() - ct0) / 1e9
-        graft.util.Timer.enabled = false
         val ctimer = graft.util.Timer.toJson
         org.apache.commons.io.FileUtils.deleteDirectory(cwork.toFile)
         (csec, cres.deleted.size, cres.rolledBack.size, ctimer)

@@ -75,6 +75,7 @@ object Main {
           Console.err.println(s"[graft] cleaner FAILED topic $topic: $err")
         }
       }
+      println(s"[graft] timings ${graft.util.Timer.toJson}")
     }
     spark.stop()
   }

@@ -495,26 +495,27 @@ object GraftExpressions {
     * starts array per token position (O(n·|starts|) interpreted lambda
     * evals, and the optimizer additionally duplicated the filter tree into
     * both its consumers). Null/empty inputs → the declarative tree's empty
-    * branches; out-of-range starts (never produced — window starts are
+    * branches. A NULL `starts`, or one holding a NULL element, keeps no
+    * token: `!exists(...)` is NULL for every position, and `filter` drops
+    * NULL. Out-of-range starts (never produced — window starts are
     * ≤ n-w+1 by construction) mask nothing beyond the token range.
     */
   def maskTokensKernel(toks: ArrayData, starts: ArrayData, w: Int): ArrayData = {
-    if (toks == null) return emptyStringArray
+    if (toks == null || starts == null) return emptyStringArray
     val n = toks.numElements()
     if (n == 0) return emptyStringArray
-    val m = if (starts == null) 0 else starts.numElements()
+    val m = starts.numElements()
     // coverage difference array over 1-based positions 1..n
     val diff = new Array[Int](n + 2)
     var j = 0
     while (j < m) {
-      if (!starts.isNullAt(j)) {
-        val s = starts.getInt(j)
-        if (s + w > 1 && s <= n) { // overlaps [1, n]
-          val from = math.max(s, 1)
-          val to = math.min(s + w, n + 1) // exclusive
-          diff(from) += 1
-          diff(to) -= 1
-        }
+      if (starts.isNullAt(j)) return emptyStringArray
+      val s = starts.getInt(j)
+      if (s + w > 1 && s <= n) { // overlaps [1, n]
+        val from = math.max(s, 1)
+        val to = math.min(s + w, n + 1) // exclusive
+        diff(from) += 1
+        diff(to) -= 1
       }
       j += 1
     }

@@ -3,11 +3,10 @@ package graft.jobs
 import java.time.Instant
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.paths.PathTemplate
 import graft.sources.{AvroRead, TopicFiles}
 import graft.time.TimeExtract
 
@@ -17,10 +16,11 @@ import graft.time.TimeExtract
   *  - C1 eligibility: file older than `ageMs` AND the ledger also covers
   *    `to+1` (a later offset was processed — the newest file is never
   *    deleted, cleaner/SourceDataCleaner.kt:106-113).
-  *  - C2 verification: re-derive every record's (bin path, time) and
-  *    anti-join against the distinct time values of the target bins
-  *    (timestamp-set containment, cleaner/TimestampExtractionCheck.kt) —
-  *    one distributed join per topic instead of per-record file reads.
+  *  - C2 verification: re-derive every record's (bin path, time) with the
+  *    writer's path function and anti-join against the distinct time
+  *    values of the target bins and their attempt files (timestamp-set
+  *    containment, cleaner/TimestampExtractionCheck.kt) — one distributed
+  *    join per topic instead of per-record file reads.
   *  - C3 rollback: a file that fails verification has its range removed
   *    from the ledger so the next restructure run re-extracts it.
   */
@@ -107,30 +107,29 @@ object Cleaner {
 
   /** Count of not-yet-extracted records per source file name (0 = safe to
     * delete). Records without a time value count as extracted (A4 rule).
+    * Each record's target is derived by the writer's own path function
+    * ([[Restructure.binPaths]]: path plugins, template, bucket prefix); a
+    * base bin's stored times are read from the base file and every
+    * existing `_1…_N` attempt sibling.
     */
   private def verifyTopic(
       spark: SparkSession, cfg: RestructureJobConfig, topic: String,
       files: Seq[String]): Map[String, Long] = {
-    val tCfg = cfg.topicConfig(topic)
     val df = AvroRead.read(spark, files)
     val dataSchema = StructType(df.schema.fields.filterNot(f =>
       f.name == AvroRead.FileCol || f.name == AvroRead.PosCol))
-    val timeCol = TimeExtract.timeColumn(dataSchema)
-    val template = tCfg.pathTemplate.getOrElse(cfg.pathTemplate)
-    val params = PathTemplate.fixedParams(dataSchema, timeCol, lit(topic),
-      cfg.extension, cfg.timeBinFormat)
-    val pathCol = PathTemplate.compile(template, params, Some(timeCol), Some(dataSchema))
+    val (dfE, pathCol) = Restructure.binPaths(cfg, topic, df, dataSchema)
 
     // persisted: read twice (distinct target paths + the anti-join count)
-    val source = df.select(col(AvroRead.FileCol).as("__src"),
-      pathCol.as("__path"), timeCol.as("__time"))
+    val source = dfE.select(col(AvroRead.FileCol).as("__src"),
+      pathCol.as("__path"), TimeExtract.timeColumn(dataSchema).as("__time"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     import spark.implicits._
     // The stored time field and its render-back-to-epoch-seconds converter,
     // in the SAME priority order as TimeExtract's chain — so the value
     // compared against __time is the one __time was derived from.
-    val chain: Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)] = Seq(
+    val chain: Seq[(String, Column => Column)] = Seq(
       "value.time" -> (c => c.cast(DoubleType)),
       "key.timeStart" -> (c => c.cast(DoubleType)),
       "key.start" -> (c => c.cast(DoubleType) / 1000.0), // stored millis
@@ -143,117 +142,64 @@ object Cleaner {
       leaves.find(_.equalsIgnoreCase(n)).map(_ -> conv)
     }.headOption
 
-    val outFs = new HPath(cfg.outputRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // cleaner.cache = target-side metadata work (reference: TimestampFileCache
-    // loading, cleaner/TimestampFileCache.kt:39-68). The probe is
-    // DISTRIBUTED, mirroring Restructure.mergeCommitBins: existence +
-    // header reads run as one Spark job over the distinct bin paths, and
-    // its result is consumed in chunks of cfg.mergeChunkBins — a
-    // verification sweep over 10^7 existing bins never holds the full
-    // path list on the driver. Missing-record counts are ADDITIVE across
-    // chunks because chunks partition the bin space and every record
-    // belongs to exactly one bin path.
-    val confEntries = graft.sources.AvroRead.fsConfEntries(spark)
+    // loading, cleaner/TimestampFileCache.kt:39-68): one probe row per base
+    // bin with its existing (file, header) slots — the base and its attempt
+    // siblings up to the first missing one. Every topic walks the siblings:
+    // the eligible files' schema need not be the one the writer saw (a
+    // batch that mixed in a map-typed schema version wrote attempt files).
+    // An unreadable target is dropped: its records count as missing, so
+    // the source file is kept.
     val outputRoot = cfg.outputRoot
+    val ext = cfg.extension
     val needHeader = !cfg.zip && cfg.format != "json"
-    val probed = source.select(col("__path")).distinct().as[String].mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val conf = new org.apache.hadoop.conf.Configuration()
-        confEntries.foreach { case (k, v) => conf.set(k, v) }
-        val pfs = new HPath(outputRoot).getFileSystem(conf)
-        it.flatMap { p =>
-          val full = new HPath(s"$outputRoot/$p")
-          if (!pfs.exists(full)) None
-          else if (!needHeader) Some((p, ""))
-          else Restructure.readHeaderLine(pfs, full).map(h => (p, h))
-          // unreadable target: dropped — its records count as missing, so
-          // the source file is kept (same outcome as the old None branch)
-        }
-      }
+    val probed = Restructure.probeEach(spark, outputRoot,
+        source.select(col("__path")).distinct().as[String]) { (pfs, p) =>
+      // the reference's attempt loop (cleaner/TimestampExtractionCheck.kt)
+      val stored = Iterator.from(0).map(i => Restructure.attemptPath(p, ext, i))
+        .map(a => a -> new HPath(s"$outputRoot/$a")).takeWhile { case (_, full) => pfs.exists(full) }
+        .flatMap { case (a, full) =>
+          if (!needHeader) Some((a, ""))
+          else Restructure.readHeaderLine(pfs, full).map(a -> _)
+        }.toSeq
+      if (stored.isEmpty) None else Some((p, stored))
     }
 
-    // One chunk's stored (__path, __time) frame: the scan construction
-    // (per-header single scans, input_file_name → bin path, zip unzip to
-    // one temp dir) is Restructure.existingBinFrames — ONE definition for
-    // both the merge and this verification. A zip bin that fails to
-    // stream is simply absent: its records count as missing, so the
-    // source file is kept. None = no readable target in this chunk.
-    // `temps` receives the chunk's unzip directory; the caller deletes it
-    // as soon as the chunk's count is drained (holding every chunk's
-    // uncompressed bytes to the end would defeat the chunking).
-    def targetTimesFor(chunk: Seq[(String, String)],
-        temps: scala.collection.mutable.Buffer[HPath]): Option[org.apache.spark.sql.DataFrame] = {
-      val (name, conv) = timeField.get
-      val (frames, _) = Restructure.existingBinFrames(spark, outFs, cfg.outputRoot,
-        chunk, cfg.format, None, cfg.zip, temps)
-      if (frames.isEmpty) None
-      else Some(frames.map { stored =>
+    // One chunk's stored (__path, __time) frame, each row keyed by its
+    // BASE bin path. The scan construction is Restructure.existingBinFrames,
+    // shared with the merge. A zip bin that fails to stream is simply
+    // absent: its records count as missing. None = no readable target.
+    val outFs = new HPath(outputRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def targetTimesFor(chunk: Seq[(String, Seq[(String, String)])],
+        temps: scala.collection.mutable.Buffer[HPath]): Option[DataFrame] =
+      timeField.filter(_ => chunk.nonEmpty).flatMap { case (name, conv) =>
+        val (frames, _) = Restructure.existingBinFrames(spark, outFs, outputRoot,
+          chunk.flatMap(_._2), cfg.format, None, cfg.zip, temps)
         val c =
           if (cfg.format == "json") graft.model.Flatten.leafColumn(name)
           else col(graft.model.Flatten.quote(name))
-        stored.select(conv(c).as("__time"), col("__path"))
-      }.reduce(_ unionByName _).distinct())
-    }
+        val siblings = for ((base, stored) <- chunk; (a, _) <- stored if a != base)
+          yield (a, base)
+        frames.map(_.select(conv(c).as("__time"), col("__path"))).reduceOption(_ unionByName _)
+          .map(_.join(broadcast(siblings.toDF("__path", "__base")), Seq("__path"), "left")
+            .select(col("__time"), coalesce(col("__base"), col("__path")).as("__path"))
+            .distinct())
+      }
 
+    // Missing-record counts are ADDITIVE across chunks: chunks partition
+    // the bin space and every record belongs to exactly one bin path.
+    val counts = scala.collection.mutable.Map.empty[String, Long]
     val withTime = source.filter(col("__time").isNotNull)
-    def countMissing(missing: org.apache.spark.sql.DataFrame,
-        into: scala.collection.mutable.Map[String, Long]): Unit = {
+    try Restructure.forEachExistingChunk(spark, outFs, cfg.mergeChunkBins, "cleaner.cache",
+        withTime, probed) { (chunk, rows, temps) =>
+      val missing = targetTimesFor(chunk, temps)
+        .fold(rows)(t => rows.join(t, Seq("__path", "__time"), "left_anti"))
       // chunked fetch of the per-source-file verdicts (tiny agg rows)
       val it = missing.groupBy(col("__src")).count().toLocalIterator()
       while (it.hasNext) {
         val r = it.next()
-        val k = r.getString(0)
-        into.update(k, into.getOrElse(k, 0L) + r.getLong(1))
+        counts.update(r.getString(0), counts.getOrElse(r.getString(0), 0L) + r.getLong(1))
       }
-    }
-
-    val counts = scala.collection.mutable.Map.empty[String, Long]
-    try {
-      val probedDf = probed.toDF("__p", "__header")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val nExisting = graft.util.Timer.time("cleaner.cache")(probedDf.count())
-        val chunkSize = math.max(1, cfg.mergeChunkBins)
-        if (nExisting == 0L || timeField.isEmpty)
-          countMissing(withTime, counts)
-        else if (nExisting <= chunkSize) {
-          // single pass covering every existing bin
-          val chunk = probedDf.as[(String, String)].collect().toSeq
-          val temps = scala.collection.mutable.ArrayBuffer.empty[HPath]
-          try targetTimesFor(chunk, temps) match {
-            case Some(t) => countMissing(withTime.join(t,
-              Seq("__path", "__time"), "left_anti"), counts)
-            case None => countMissing(withTime, counts)
-          } finally temps.foreach(t => outFs.delete(t, true))
-        } else {
-          // chunk-consumption loop mirrors Restructure.mergeCommitBins
-          // (same repartition→toLocalIterator→grouped discipline; only the
-          // probe arity and the per-chunk action differ) — change both in
-          // lockstep; the scanned-row→path mapping itself is shared
-          // (existingBinFrames)
-          import scala.jdk.CollectionConverters._
-          val nParts = math.max(1, math.ceil(nExisting.toDouble / chunkSize).toInt)
-          val chunks = probedDf.repartition(nParts, col("__p"))
-            .as[(String, String)].toLocalIterator().asScala.grouped(chunkSize)
-          for (chunk <- chunks) {
-            val chunkPaths = spark.createDataset(chunk.map(_._1)).toDF("__path")
-            val withTimeChunk = withTime.join(broadcast(chunkPaths), Seq("__path"), "left_semi")
-            // per-chunk temp cleanup: the chunk's count is fully drained
-            // before the delete, and holding every chunk's uncompressed
-            // zip bytes to the end would peak at the whole store's size
-            val temps = scala.collection.mutable.ArrayBuffer.empty[HPath]
-            try targetTimesFor(chunk, temps) match {
-              case Some(t) => countMissing(withTimeChunk.join(t,
-                Seq("__path", "__time"), "left_anti"), counts)
-              case None => countMissing(withTimeChunk, counts)
-            } finally temps.foreach(t => outFs.delete(t, true))
-          }
-          // records whose bin has no existing target at all: all missing
-          countMissing(withTime.join(
-            probedDf.select(col("__p").as("__path")), Seq("__path"), "left_anti"), counts)
-        }
-      } finally probedDf.unpersist(false)
     } finally source.unpersist(false)
     files.map(f => new HPath(f).getName).map(n => n -> counts.getOrElse(n, 0L)).toMap
   }

@@ -3,7 +3,7 @@ package graft.jobs
 import java.time.Instant
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -243,23 +243,7 @@ object Restructure {
     val tCfg = cfg.topicConfig(topic)
     val dataSchema = StructType(df.schema.fields.filterNot(f =>
       f.name == AvroRead.FileCol || f.name == AvroRead.PosCol))
-
-    val timeCol = TimeExtract.timeColumn(dataSchema)
-    val template = tCfg.pathTemplate.getOrElse(cfg.pathTemplate)
-    val params = PathTemplate.fixedParams(dataSchema, timeCol, lit(topic),
-      cfg.extension, cfg.timeBinFormat)
-    // G6: plugin enrichment (broadcast-joined dimension columns) happens
-    // once per batch, before path compilation; the output projection selects
-    // by dataSchema, so enrichment columns never reach the written files
-    val dfE = cfg.pathPlugins.foldLeft(df)((d, p) => p.enrich(d))
-    val basePath = PathTemplate.compile(template, params, Some(timeCol), Some(dataSchema),
-      cfg.pathPlugins)
-    // G8 bucket routing: a second template prefixes the output path
-    val pathCol = cfg.bucketTemplate.fold(basePath)(bt =>
-      concat(bucketWithFallback(cfg,
-          PathTemplate.compile(bt, params, Some(timeCol), Some(dataSchema), cfg.pathPlugins)),
-        lit("/"), basePath))
-
+    val (dfE, pathCol) = binPaths(cfg, topic, df, dataSchema)
     val hasDynamic = Flatten.leafPaths(dataSchema).exists {
       case (_, _: MapType) | (_, _: ArrayType) => true
       case _ => false
@@ -272,8 +256,7 @@ object Restructure {
       if (cfg.format == "json")
         writeJsonBins(spark, cfg, fs, topic, dfE, dataSchema, pathCol, tCfg, sidecarBytes)
       else if (hasDynamic)
-        writeCsvBinsDynamic(spark, cfg, fs, topic, dfE, dataSchema, timeCol, template, tCfg,
-          sidecarBytes)
+        writeCsvBinsDynamic(spark, cfg, fs, topic, dfE, dataSchema, pathCol, tCfg, sidecarBytes)
       else writeCsvBins(spark, cfg, fs, topic, dfE, dataSchema, pathCol, tCfg, sidecarBytes)
     }
 
@@ -324,6 +307,27 @@ object Restructure {
     TopicResult(topic, files, records, written)
   }
 
+  /** A record's bin path for `topic` — the one derivation shared by the
+    * writer and the cleaner's verification, so the cleaner probes exactly
+    * the file the writer chose. G6: path plugins enrich the frame
+    * (broadcast-joined dimension columns) before the topic/global template
+    * compiles; the output projections select by dataSchema, so enrichment
+    * columns never reach written files. G8: a bucket template prefixes the
+    * path. Returns the enriched frame and the path column over it.
+    */
+  private[jobs] def binPaths(cfg: RestructureJobConfig, topic: String, df: DataFrame,
+      dataSchema: StructType): (DataFrame, Column) = {
+    val timeCol = TimeExtract.timeColumn(dataSchema)
+    val params = PathTemplate.fixedParams(dataSchema, timeCol, lit(topic),
+      cfg.extension, cfg.timeBinFormat)
+    def compile(template: String): Column =
+      PathTemplate.compile(template, params, Some(timeCol), Some(dataSchema), cfg.pathPlugins)
+    val basePath = compile(cfg.topicConfig(topic).pathTemplate.getOrElse(cfg.pathTemplate))
+    val pathCol = cfg.bucketTemplate.fold(basePath)(bt =>
+      concat(bucketWithFallback(cfg, compile(bt)), lit("/"), basePath))
+    (cfg.pathPlugins.foldLeft(df)((d, p) => p.enrich(d)), pathCol)
+  }
+
   /** Flattened CSV output projection: dot-named leaves in schema order,
     * binary → unpadded base64, NullType → string, excludeFields dropped,
     * everything cast to its CSV string form (so merge-with-existing unions
@@ -358,21 +362,17 @@ object Restructure {
     * gzip/zip) is quarantined as `<name>.corrupted[-i]` and the bin starts
     * fresh (FileCache.kt:205-235).
     *
-    * Merge PLANNING is distributed AND its consumption CHUNKED: existence +
-    * readability + header probing runs as one Spark job over the distinct
-    * bin paths (one FS metadata call per bin rides the executors, not a
-    * driver thread pool), and the probe result is consumed on the driver in
-    * chunks of at most `cfg.mergeChunkBins` paths — each chunk's
-    * header-group readers are planned and COMMITTED before the next chunk
-    * is fetched, so a re-run touching 10^7 pre-existing bins never holds
-    * more than one chunk of path strings (plus one probe shuffle
-    * partition) on the driver. A cold run short-circuits on the probe
-    * count and fetches nothing. Per-chunk commits are safe because chunks
-    * PARTITION the bin space: every bin's rows (existing + new) land
-    * wholly in exactly one commit, the writer's dedup is per bin, and the
-    * ledger marks source files only after the whole topic batch succeeds —
-    * a crash mid-chunks re-runs the batch idempotently under the
-    * reference's append contract (existing rows participate in dedup).
+    * Merge planning is distributed and consumed in chunks
+    * ([[forEachExistingChunk]]): existence + readability + header probing
+    * runs as one Spark job over the distinct bin paths, and each chunk of
+    * at most `cfg.mergeChunkBins` existing bins is planned and COMMITTED
+    * before the next is fetched, so a re-run touching 10^7 pre-existing
+    * bins never holds more than one chunk of path strings on the driver.
+    * Per-chunk commits are safe because every bin's rows (existing + new)
+    * land wholly in exactly one commit, the writer's dedup is per bin, and
+    * the ledger marks source files only after the whole topic batch
+    * succeeds — a crash mid-chunks re-runs the batch idempotently under
+    * the reference's append contract (existing rows participate in dedup).
     *
     * `jsonSchema` is Some(nested schema) for JSON bins (read typed, no
     * inference); None for CSV bins (read as strings by each file's header).
@@ -391,76 +391,95 @@ object Restructure {
       prepared: DataFrame, format: String, jsonSchema: Option[StructType],
       topic: String, sidecar: Option[Array[Byte]]): WrittenBins = {
     import spark.implicits._
-    val confEntries = AvroRead.fsConfEntries(spark)
     val outputRoot = cfg.outputRoot
     // probe state: 0 = exists (zip mode: no header needed), 1 = readable
     // with header, 2 = exists but unreadable/corrupt
     val wantHeader = !cfg.zip
     val fmt = format
-    val probed = prepared.select(col("__path")).distinct().as[String].mapPartitions { it =>
+    val probed = probeEach(spark, outputRoot,
+        prepared.select(col("__path")).distinct().as[String]) { (pfs, p) =>
+      val full = new HPath(s"$outputRoot/$p")
+      if (!pfs.exists(full)) None
+      else if (!wantHeader) Some((p, 0, ""))
+      else if (!sniffReadable(pfs, full.toString)) Some((p, 2, ""))
+      else if (fmt == "json") Some((p, 1, ""))
+      else readHeaderLine(pfs, full) match {
+        case Some(h) => Some((p, 1, h))
+        case None => Some((p, 2, ""))
+      }
+    }
+    forEachExistingChunk(spark, fs, cfg.mergeChunkBins, "write.open", prepared, probed) {
+      (chunk, rows, temps) =>
+        commitBins(spark, cfg, fs,
+          if (chunk.isEmpty) rows
+          else mergeChunk(spark, cfg, fs, rows, chunk, fmt, jsonSchema, temps),
+          format, topic, sidecar)
+    }.reduce(_.merge(_, cfg.maxReportedPaths))
+  }
+
+  /** Runs `probe` on every path of `paths` executor-side, with one
+    * filesystem per task opened from the session's Hadoop settings — the
+    * existence, header and attempt-slot probes of the merge, the attempt
+    * resolution and the cleaner all ride the executors this way.
+    */
+  private[jobs] def probeEach[T: Encoder](spark: SparkSession, outputRoot: String,
+      paths: Dataset[String])(probe: (FileSystem, String) => Option[T]): Dataset[T] = {
+    val confEntries = AvroRead.fsConfEntries(spark)
+    paths.mapPartitions { it =>
       if (it.isEmpty) Iterator.empty
       else {
         val conf = new org.apache.hadoop.conf.Configuration()
         confEntries.foreach { case (k, v) => conf.set(k, v) }
         val pfs = new HPath(outputRoot).getFileSystem(conf)
-        it.flatMap { p =>
-          val full = new HPath(s"$outputRoot/$p")
-          if (!pfs.exists(full)) None
-          else if (!wantHeader) Some((p, 0, ""))
-          else if (!sniffReadable(pfs, full.toString)) Some((p, 2, ""))
-          else if (fmt == "json") Some((p, 1, ""))
-          else readHeaderLine(pfs, full) match {
-            case Some(h) => Some((p, 1, h))
-            case None => Some((p, 2, ""))
-          }
-        }
+        it.flatMap(p => probe(pfs, p))
       }
     }
-    val probedDf = probed.toDF("__p", "__state", "__header")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** The chunked probe-and-consume loop over EXISTING bins, shared by the
+    * merge ([[mergeCommitBins]]) and the cleaner's verification. `probed`
+    * holds one row per existing bin, keyed by its first column (the bin
+    * path); `rows` carries that path as `__path`.
+    * `action(chunk, chunkRows, temps)` runs once per chunk of probe rows
+    * with the rows of those bins; an empty chunk means "no existing
+    * target". Three branches on the existing-bin count:
+    *  - none: one action over every row;
+    *  - at most `chunkBins`: one action over every row with the whole
+    *    probe collected — the common append keeps its single-commit plan;
+    *  - more: chunks of at most `chunkBins` probe rows are fetched one at a
+    *    time (cached partitions sized ~chunkBins, so toLocalIterator holds
+    *    one) and each re-scans `rows` for its bins, trading N cached scans
+    *    for O(chunk) driver heap; a final action takes the rows whose bin
+    *    has no existing target.
+    * Chunks partition the bin space, so every bin's rows meet its existing
+    * content in exactly one action. `temps` receives scratch directories,
+    * deleted as soon as their action returns.
+    */
+  private[jobs] def forEachExistingChunk[T, R](spark: SparkSession, fs: FileSystem,
+      chunkBins: Int, stage: String, rows: DataFrame, probed: Dataset[T])(
+      action: (Seq[T], DataFrame, scala.collection.mutable.Buffer[HPath]) => R): Seq[R] = {
+    import scala.jdk.CollectionConverters._
+    val cached = probed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def run(chunk: Seq[T], chunkRows: DataFrame): R = {
+      val temps = scala.collection.mutable.ArrayBuffer.empty[HPath]
+      try action(chunk, chunkRows, temps) finally temps.foreach(t => fs.delete(t, true))
+    }
     try {
-      val nExisting = Timer.time("write.open")(probedDf.count())
-      val chunkSize = math.max(1, cfg.mergeChunkBins)
-      if (nExisting == 0L)
-        commitBins(spark, cfg, fs, prepared, format, topic, sidecar)
-      else if (nExisting <= chunkSize) {
-        // common append case: one chunk covering every existing bin —
-        // the exact single-commit plan shape of a non-chunked merge
-        val chunk = probedDf.as[(String, Int, String)].collect().toSeq
-        val temps = scala.collection.mutable.ArrayBuffer.empty[HPath]
-        try commitBins(spark, cfg, fs,
-          mergeChunk(spark, cfg, fs, prepared, chunk, fmt, jsonSchema, temps),
-          format, topic, sidecar)
-        finally temps.foreach(t => fs.delete(t, true))
-      } else {
-        // giant re-run: fetch ≤chunkSize probe rows at a time (cached
-        // partitions sized ~chunkSize, so toLocalIterator holds one);
-        // each chunk re-scans the persisted batch for its bins' rows —
-        // N-chunk re-runs trade N cached scans for O(chunk) driver heap.
-        // Cleaner.verifyTopic mirrors this loop — change both in lockstep.
-        import scala.jdk.CollectionConverters._
+      val key = col(cached.columns.head)
+      val nExisting = Timer.time(stage)(cached.count())
+      val chunkSize = math.max(1, chunkBins)
+      if (nExisting == 0L) Seq(run(Nil, rows))
+      else if (nExisting <= chunkSize) Seq(run(cached.collect().toSeq, rows))
+      else {
         val nParts = math.max(1, math.ceil(nExisting.toDouble / chunkSize).toInt)
-        var written = WrittenBins.empty
-        val chunks = probedDf.repartition(nParts, col("__p"))
-          .as[(String, Int, String)].toLocalIterator().asScala.grouped(chunkSize)
-        for (chunk <- chunks) {
-          val chunkPaths = spark.createDataset(chunk.map(_._1)).toDF("__path")
-          val preparedChunk =
-            prepared.join(broadcast(chunkPaths), Seq("__path"), "left_semi")
-          val temps = scala.collection.mutable.ArrayBuffer.empty[HPath]
-          try written = written.merge(commitBins(spark, cfg, fs,
-            mergeChunk(spark, cfg, fs, preparedChunk, chunk, fmt, jsonSchema, temps),
-            format, topic, sidecar), cfg.maxReportedPaths)
-          finally temps.foreach(t => fs.delete(t, true))
-        }
-        // bins with no existing target: one final new-only commit
-        val newOnly = prepared.join(
-          probedDf.select(col("__p").as("__path")), Seq("__path"), "left_anti")
-        written.merge(
-          commitBins(spark, cfg, fs, newOnly, format, topic, sidecar),
-          cfg.maxReportedPaths)
+        val chunks = cached.repartition(nParts, key).toLocalIterator().asScala.grouped(chunkSize)
+        val perChunk = chunks.map { chunk =>
+          val chunkPaths = spark.createDataset(chunk)(cached.encoder).select(key.as("__path"))
+          run(chunk, rows.join(broadcast(chunkPaths), Seq("__path"), "left_semi"))
+        }.toVector
+        perChunk :+ run(Nil, rows.join(cached.select(key.as("__path")), Seq("__path"), "left_anti"))
       }
-    } finally probedDf.unpersist(false)
+    } finally cached.unpersist(false)
   }
 
   /** One chunk's merge plan: quarantine corrupt targets, then union the
@@ -514,7 +533,7 @@ object Restructure {
 
   /** Readers over a chunk's EXISTING bins — the ONE place the scanned-row
     * → bin-path mapping is defined (shared by [[mergeChunk]] and
-    * [[Cleaner.verifyTopic]], which previously each built it): one
+    * [[Cleaner.verifyTopic]]): one
     * DataFrame per distinct CSV header (one overall for JSON), each
     * carrying the known relative bin path as its `__path` column. Zip
     * bins stream into one dot-prefixed temp directory first (appended to
@@ -850,8 +869,8 @@ object Restructure {
     */
   private[graft] def writeCsvBinsDynamic(
       spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem, topic: String,
-      df: DataFrame, dataSchema: StructType, timeCol: Column, template: String,
-      tCfg: TopicJobConfig, sidecar: Option[Array[Byte]] = None): WrittenBins = {
+      df: DataFrame, dataSchema: StructType, pathCol: Column, tCfg: TopicJobConfig,
+      sidecar: Option[Array[Byte]] = None): WrittenBins = {
     import graft.model.DynamicShape
     // persisted once: the fingerprint groups' headers come from ONE
     // aggregation over this frame, and each group's write re-reads it from
@@ -914,25 +933,14 @@ object Restructure {
       // fields containing delimiter/quote/newline (map keys can hold any of
       // these) — apply the same quoting before comparing
       val header = outCols.map(c => csvQuote(dataColName(c))).mkString(",")
-      val params = PathTemplate.fixedParams(dataSchema, timeCol, lit(topic),
-        cfg.extension, cfg.timeBinFormat)
-      val plainPathCol = PathTemplate.compile(template, params, Some(timeCol), Some(dataSchema),
-        cfg.pathPlugins)
-      // G8 bucket routing applies to dynamic topics exactly as to static ones
-      val basePathCol = cfg.bucketTemplate.fold(plainPathCol)(bt =>
-        concat(bucketWithFallback(cfg,
-            PathTemplate.compile(bt, params, Some(timeCol), Some(dataSchema), cfg.pathPlugins)),
-          lit("/"), plainPathCol))
       val withBase = group.select(outCols ++ Seq(
-        basePathCol.as("__base"), col(AvroRead.FileCol), col(AvroRead.PosCol)): _*)
+        pathCol.as("__base"), col(AvroRead.FileCol), col(AvroRead.PosCol)): _*)
       // attempt slots resolve EXECUTOR-side (one exists/header probe chain
       // per distinct base path, distributed like the merge planning above).
       // Groups still commit sequentially, so earlier groups' files are
       // visible to later groups' probes.
-      val confEntries = AvroRead.fsConfEntries(spark)
       val outputRoot = cfg.outputRoot
       val ext = cfg.extension
-      val hdr = header
       import spark.implicits._
       // the probing itself is distributed, but the RESULT is materialized
       // exactly once: mapDf is FS-state-dependent (exists/header probes),
@@ -942,14 +950,9 @@ object Restructure {
       // renames happen in between, routing rows to a bin never probed for
       // merging. The mapping is one row per bin this group touches, the
       // same cardinality the broadcast join holds on the driver anyway.
-      val attemptPairs = withBase.select(col("__base")).distinct().as[String].mapPartitions { it =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val conf = new org.apache.hadoop.conf.Configuration()
-          confEntries.foreach { case (k, v) => conf.set(k, v) }
-          val pfs = new HPath(outputRoot).getFileSystem(conf)
-          it.map(bp => (bp, resolveAttemptPath(pfs, outputRoot, ext, bp, hdr)))
-        }
+      val attemptPairs = probeEach(spark, outputRoot,
+          withBase.select(col("__base")).distinct().as[String]) { (pfs, bp) =>
+        Some((bp, resolveAttemptPath(pfs, outputRoot, ext, bp, header)))
       }.collect()
       val mapDf = spark.createDataset(attemptPairs.toSeq).toDF("__base", "__path")
       val prepared = withBase.join(broadcast(mapDf), "__base").drop("__base")
@@ -990,27 +993,31 @@ object Restructure {
     (if (i >= 0) s.substring(i + 4) else s).stripPrefix("`").stripSuffix("`")
   }
 
+  /** Attempt slot `i` of a bin: `bin.csv`, `bin_1.csv`, `bin_2.csv`, …
+    * (RestructureWorker.kt:163-183).
+    */
+  private[jobs] def attemptPath(basePath: String, extension: String, i: Int): String =
+    if (i == 0) basePath
+    else if (basePath.endsWith(extension))
+      basePath.dropRight(extension.length) + s"_$i" + extension
+    else basePath + s"_$i"
+
   /** First free or header-matching attempt slot for `basePath`
-    * (`bin.csv`, `bin_1.csv`, `bin_2.csv`, …). Runs executor-side (static
-    * call, primitive args) so attempt planning distributes with the paths.
+    * ([[attemptPath]]). Runs executor-side (static call, primitive args) so
+    * attempt planning distributes with the paths.
     */
   private[jobs] def resolveAttemptPath(
       fs: FileSystem, outputRoot: String, extension: String,
       basePath: String, header: String): String = {
-    def withAttempt(i: Int): String =
-      if (i == 0) basePath
-      else if (basePath.endsWith(extension))
-        basePath.dropRight(extension.length) + s"_$i" + extension
-      else basePath + s"_$i"
     var i = 0
     while (i < 1000) {
-      val cand = withAttempt(i)
+      val cand = attemptPath(basePath, extension, i)
       val full = new HPath(s"$outputRoot/$cand")
       if (!fs.exists(full)) return cand
       if (readHeaderLine(fs, full).contains(header)) return cand
       i += 1
     }
-    withAttempt(i)
+    attemptPath(basePath, extension, i)
   }
 
   /** First header RECORD of a (possibly gzip/zip) CSV bin, or None if

@@ -46,6 +46,7 @@ object Service {
     var iter = 0
     while (svc.maxIterations.forall(iter < _)) {
       val t0 = System.currentTimeMillis()
+      graft.util.Timer.reset()
       try {
         if (svc.restructureEnabled)
           Restructure.run(spark, cfg,
@@ -58,6 +59,7 @@ object Service {
         case e: Exception =>
           System.err.println(s"[graft-service] iteration $iter failed: ${e.getMessage}")
       }
+      println(s"[graft] timings ${graft.util.Timer.toJson}")
       iter += 1
       if (svc.maxIterations.forall(iter < _)) {
         val elapsed = System.currentTimeMillis() - t0

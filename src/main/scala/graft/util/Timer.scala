@@ -3,28 +3,27 @@ package graft.util
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 
-/** Opt-in per-stage timing with the reference's stage vocabulary
+/** Always-on per-stage timing with the reference's stage vocabulary
   * (util/Timer.kt:25-118: `read`, `write.convert`, `write.open`,
   * `write.schema`, `close.deduplicate`, `close.store`, `accounting.*`,
   * `cleaner.*`) so BENCH metrics stay name-comparable. In the Spark
   * engine convert+dedup+store fuse into one job; the fused job is
   * attributed to `close.store`, plan construction to `write.convert`.
+  * Stages run on the driver, so the cost is a few `nanoTime` calls per
+  * topic.
   */
 object Timer {
-  @volatile var enabled: Boolean = false
   private val nanos = new ConcurrentHashMap[String, LongAdder]()
   private val counts = new ConcurrentHashMap[String, LongAdder]()
 
-  def time[T](stage: String)(f: => T): T =
-    if (!enabled) f
-    else {
-      val t0 = System.nanoTime()
-      try f
-      finally {
-        nanos.computeIfAbsent(stage, _ => new LongAdder).add(System.nanoTime() - t0)
-        counts.computeIfAbsent(stage, _ => new LongAdder).increment()
-      }
+  def time[T](stage: String)(f: => T): T = {
+    val t0 = System.nanoTime()
+    try f
+    finally {
+      nanos.computeIfAbsent(stage, _ => new LongAdder).add(System.nanoTime() - t0)
+      counts.computeIfAbsent(stage, _ => new LongAdder).increment()
     }
+  }
 
   def reset(): Unit = { nanos.clear(); counts.clear() }
 

@@ -278,4 +278,177 @@ class CleanerSpec extends SparkSpec {
     assert(r2.processedTopics.exists(_.files.exists(_.endsWith("0000000018+0000000020.avro"))))
     assert(Files.exists(bin))
   }
+
+  // --- exactly-once across a clean, dedup OFF (the default) ---------------
+  // Each case lands an older file, restructures, lands a newer file (same
+  // hour bin, so the second run merges), restructures, cleans, and
+  // restructures once more. The cleaner must find every record where the
+  // writer put it: the older file is deleted, nothing rolls back, and the
+  // last run re-extracts nothing — with dedup off a re-extraction would
+  // append the older file's rows a second time.
+
+  /** RADAR-shaped records; with `answers`, record i carries the map keys
+    * `q0..q(i % 3)`, so a bin holding three consecutive records has three
+    * header shapes (CSV attempt files `_1`, `_2`).
+    */
+  private def radarSchema(answers: Boolean) = {
+    val answersField =
+      if (answers) ",{\"name\":\"answers\",\"type\":{\"type\":\"map\",\"values\":\"int\"}}"
+      else ""
+    new org.apache.avro.Schema.Parser().parse(
+      s"""{"type":"record","name":"R","fields":[
+        |{"name":"key","type":{"type":"record","name":"K","fields":[
+        |  {"name":"projectId","type":"string"},{"name":"userId","type":"string"},
+        |  {"name":"sourceId","type":"string"}]}},
+        |{"name":"value","type":{"type":"record","name":"V","fields":[
+        |  {"name":"time","type":"double"},{"name":"status","type":"string"}$answersField
+        |]}}]}""".stripMargin)
+  }
+
+  private def writeRadar(dir: Path, name: String, is: Range, answers: Boolean): Unit = {
+    import org.apache.avro.file.DataFileWriter
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    import scala.jdk.CollectionConverters._
+    val schema = radarSchema(answers)
+    val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
+    w.create(schema, dir.resolve(name).toFile)
+    is.foreach { i =>
+      val k = new GenericData.Record(schema.getField("key").schema)
+      k.put("projectId", "p1"); k.put("userId", "u1"); k.put("sourceId", "s1")
+      val v = new GenericData.Record(schema.getField("value").schema)
+      v.put("time", 1.6095816e9 + i * 60) // 2021-01-02T10:00Z + i minutes
+      v.put("status", s"st${i % 2}")
+      if (answers) v.put("answers", (0 to i % 3).map(q => s"q$q" -> Int.box(i)).toMap.asJava)
+      val r = new GenericData.Record(schema)
+      r.put("key", k); r.put("value", v)
+      w.append(r)
+    }
+    w.close()
+  }
+
+  private def csvFiles(out: Path): Seq[Path] = {
+    import scala.jdk.CollectionConverters._
+    Files.walk(out).iterator().asScala.filter(_.toString.endsWith(".csv")).toSeq.sorted
+  }
+
+  /** Every output line, tagged with its file: the multiset a re-append grows. */
+  private def outputRows(out: Path): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    csvFiles(out).flatMap(f => Files.readAllLines(f).asScala.map(l => s"${out.relativize(f)}|$l"))
+      .sorted
+  }
+
+  /** `clean` deletes exactly `deleted` and rolls nothing back; one more
+    * restructure then re-extracts nothing, the output rows are as they
+    * were before the clean and the ledger is exactly `t/0: [0, 11]`.
+    */
+  private def assertCleanedExactlyOnce(label: String, cfg: RestructureJobConfig, out: Path,
+      clean: => Cleaner.CleanResult, deleted: String): Unit = {
+    val before = outputRows(out)
+    assert(before.size == 12 + csvFiles(out).size, s"[$label] one line per record plus headers")
+    val result = clean
+    assert(result.failedTopics.isEmpty, s"[$label] ${result.failedTopics}")
+    assert(result.rolledBack.isEmpty, s"[$label] verification missed stored records: $result")
+    assert(result.deleted.map(p => Paths.get(p).getFileName.toString) == Seq(deleted), s"[$label]")
+
+    val again = Restructure.run(spark, cfg)
+    assert(again.processedTopics.isEmpty, s"[$label] re-extracted: ${again.processedTopics}")
+    assert(outputRows(out) == before, s"[$label] output rows changed after the clean")
+    val fs = new org.apache.hadoop.fs.Path(cfg.outputRoot)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ledger = Restructure.loadLedger(fs, cfg.ledger)
+    assert(ledger.topicPartitions == Seq(("t", 0)), s"[$label] ${ledger.toJson}")
+    assert(ledger("t", 0).intervals.map(r => (r._1, r._2)) == Seq((0L, 11L)),
+      s"[$label] ${ledger.toJson}")
+  }
+
+  /** Runs the land/restructure/clean/restructure sequence on topic `t` and
+    * returns the output's CSV files (relative), for the caller's routing
+    * checks.
+    */
+  private def cleanExactlyOnce(label: String, answers: Boolean,
+      mkCfg: (Path, Path) => RestructureJobConfig): Seq[Path] = {
+    val work = Files.createTempDirectory(s"graft-clean-$label")
+    val dir = work.resolve("in/t/partition=0")
+    Files.createDirectories(dir)
+    val out = work.resolve("out")
+    val cfg = mkCfg(work.resolve("in"), out)
+    assert(!cfg.dedup && cfg.topics.isEmpty, "these cases run with dedup off")
+    val older = "t+0+0000000000+0000000005.avro"
+    val newer = "t+0+0000000006+0000000011.avro"
+    writeRadar(dir, older, 0 until 6, answers)
+    assert(Restructure.run(spark, cfg).failedTopics.isEmpty, label)
+    writeRadar(dir, newer, 6 until 12, answers)
+    assert(Restructure.run(spark, cfg).failedTopics.isEmpty, label)
+
+    assertCleanedExactlyOnce(label, cfg, out, Cleaner.run(spark, cfg, ageMs = 0), older)
+    assert(!Files.exists(dir.resolve(older)) && Files.exists(dir.resolve(newer)))
+    csvFiles(out).map(out.relativize)
+  }
+
+  test("dedup off: a dynamic-header bin's attempt files verify; no rollback, no re-append") {
+    // two base bins (by status), each with three header shapes; chunk size
+    // 1 takes the many-chunks branch of the probe loop as well
+    for (chunk <- Seq(100000, 1)) {
+      val files = cleanExactlyOnce(s"attempts$chunk", answers = true, (in, out) =>
+        RestructureJobConfig(inputRoot = in.toString, outputRoot = out.toString,
+          pathTemplate = "${projectId}/${userId}/${topic}/${value:status}/${filename}",
+          mergeChunkBins = chunk))
+      assert(files.map(_.toString) == Seq("st0", "st1").flatMap(st => Seq(
+        s"p1/u1/t/$st/20210102_1000.csv", s"p1/u1/t/$st/20210102_1000_1.csv",
+        s"p1/u1/t/$st/20210102_1000_2.csv")), s"chunk=$chunk: three header shapes per bin")
+    }
+  }
+
+  test("dedup off: a batch mixing map and map-less schemas; the map-less file verifies alone") {
+    // one restructure batch reads a (map field, offsets 0-3), b (no map
+    // field, 4-7) and c (map field, 8-11) into one bin: a's three header
+    // shapes take the base and `_1`, `_2`, b's map-less rows take `_3`.
+    // Only b is eligible (a is too young, c is the newest), so the cleaner
+    // reads a schema without the map field and must still walk the siblings.
+    val work = Files.createTempDirectory("graft-clean-mixed")
+    val dir = work.resolve("in/t/partition=0")
+    Files.createDirectories(dir)
+    val out = work.resolve("out")
+    val cfg = RestructureJobConfig(inputRoot = work.resolve("in").toString,
+      outputRoot = out.toString, pathTemplate = "${projectId}/${userId}/${topic}/${filename}")
+    val b = "t+0+0000000004+0000000007.avro"
+    writeRadar(dir, "t+0+0000000000+0000000003.avro", 0 until 4, answers = true)
+    writeRadar(dir, b, 4 until 8, answers = false)
+    writeRadar(dir, "t+0+0000000008+0000000011.avro", 8 until 12, answers = true)
+    Files.setLastModifiedTime(dir.resolve(b),
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 2L * 24 * 3600 * 1000))
+    assert(Restructure.run(spark, cfg).failedTopics.isEmpty)
+    assert(csvFiles(out).map(out.relativize(_).toString) == Seq("", "_1", "_2", "_3")
+      .map(a => s"p1/u1/t/20210102_1000$a.csv"), "three map shapes, then the map-less one")
+    assert(Files.readAllLines(out.resolve("p1/u1/t/20210102_1000_3.csv")).size == 5,
+      "b's four rows and a header in the last attempt file")
+
+    assertCleanedExactlyOnce("mixed", cfg, out, Cleaner.run(spark, cfg, ageMs = 3600L * 1000), b)
+    assert(!Files.exists(dir.resolve(b)))
+  }
+
+  test("dedup off: bucket-routed bins (bucketTemplate) verify; no rollback, no re-append") {
+    val files = cleanExactlyOnce("bucket", answers = false, (in, out) =>
+      RestructureJobConfig(inputRoot = in.toString, outputRoot = out.toString,
+        pathTemplate = "${projectId}/${userId}/${topic}/${value:status}/${filename}",
+        bucketTemplate = Some("bucket-${value:status}")))
+    assert(files.nonEmpty && files.forall(_.toString.startsWith("bucket-st")), s"$files")
+  }
+
+  test("dedup off: mp: plugin-routed bins (MpDimensionSource.Static) verify; no rollback, no re-append") {
+    import graft.paths.{MpDimensionSource, MpPathFormatterPlugin}
+    val sql = spark
+    import sql.implicits._
+    val projects = Seq(("p1", "org-A", Map.empty[String, String]))
+      .toDF("id", "organization", "attributes")
+    val subjects = Seq(("p1", "u1", "grpX", "ext-7", Map.empty[String, String]))
+      .toDF("projectId", "id", "group", "externalId", "attributes")
+    val plugin = new MpPathFormatterPlugin(new MpDimensionSource.Static(projects, subjects))
+    val files = cleanExactlyOnce("mp", answers = false, (in, out) =>
+      RestructureJobConfig(inputRoot = in.toString, outputRoot = out.toString,
+        pathTemplate = "${mp:organization}/${mp:group}/${userId}/${topic}/${filename}",
+        pathPlugins = Seq(plugin)))
+    assert(files.nonEmpty && files.forall(_.toString.startsWith("org-A/grpX/u1/t/")), s"$files")
+  }
 }

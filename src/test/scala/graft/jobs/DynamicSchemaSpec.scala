@@ -252,11 +252,8 @@ class DynamicSchemaSpec extends SparkSpec {
     try {
       Restructure.run(spark, RestructureJobConfig(
         inputRoot = work.resolve("in").toString, outputRoot = out.toString))
-      // listener events are delivered async: wait for at least one query to
-      // prove the counter is live, then let the queue drain
-      val deadline = System.currentTimeMillis() + 10000
-      while (queries.get() < 1 && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      Thread.sleep(1000)
+      // listener events are delivered async: drain the bus before counting
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
 
     val bin = out.resolve("unknown-project/u1/map_topic/20210102_1000.csv")

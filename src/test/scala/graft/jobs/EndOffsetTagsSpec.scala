@@ -33,7 +33,7 @@ class EndOffsetTagsSpec extends SparkSpec {
         jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
-    try { body; Thread.sleep(300) } // let queued listener events drain
+    try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(listener)
     jobs.get()
   }

@@ -13,7 +13,9 @@ import graft.functions.GraftExpressions
   * `transform(filter(sequence(1, n), i => !exists(starts, s => i >= s &&
   * i < s + w)), i => element_at(toks, i))` — on every shape: empty token
   * lists, empty/absent start sets, overlapping and adjacent windows,
-  * out-of-range starts, null tokens. The kernel feeds the oracle-checked
+  * out-of-range starts, null tokens, and NULL token lists, NULL start sets
+  * and NULL start elements (where the declarative `!exists` is NULL and
+  * `filter` drops every token). The kernel feeds the oracle-checked
   * q_mask_spans/q_decontam_mask results (masked_text via concat_ws and
   * n_masked_tokens via the size difference), so an element drift would
   * silently change both.
@@ -25,14 +27,21 @@ class MaskTokensKernelSpec extends SparkSpec {
     Gen.alphaNumStr.map(_.take(6)),
     Gen.oneOf("", "a", "é中文", "tok tok", "\\", "\"", "0"),
     Gen.listOfN(3, Gen.choose(33.toChar, 126.toChar)).map(_.mkString))
-  private val arrGen: Gen[List[Option[String]]] =
-    Gen.chooseNum(0, 30).flatMap(n =>
-      Gen.listOfN(n, Gen.frequency(9 -> tokenGen.map(Some(_)), 1 -> Gen.const(None))))
+  private val arrGen: Gen[Option[List[Option[String]]]] =
+    Gen.frequency(
+      9 -> Gen.chooseNum(0, 30).flatMap(n =>
+        Gen.listOfN(n, Gen.frequency(9 -> tokenGen.map(Some(_)), 1 -> Gen.const(None))))
+        .map(Some(_)),
+      1 -> Gen.const(None))
   // starts beyond the valid 1..n-w+1 range too — the kernel must clamp
   // exactly like the declarative exists() (positions outside [1, n] simply
   // cover nothing extra)
-  private val startsGen: Gen[List[Int]] =
-    Gen.chooseNum(0, 8).flatMap(n => Gen.listOfN(n, Gen.chooseNum(-3, 40)))
+  private val startsGen: Gen[Option[List[Option[Int]]]] =
+    Gen.frequency(
+      8 -> Gen.chooseNum(0, 8).flatMap(n => Gen.listOfN(n,
+        Gen.frequency(12 -> Gen.chooseNum(-3, 40).map(Some(_)), 1 -> Gen.const(None))))
+        .map(Some(_)),
+      1 -> Gen.const(None))
 
   private def declarativeKept(toks: org.apache.spark.sql.Column,
       ms: org.apache.spark.sql.Column, w: Int): org.apache.spark.sql.Column = {
@@ -46,7 +55,7 @@ class MaskTokensKernelSpec extends SparkSpec {
   test("property: mask-tokens kernel ≡ declarative keep-index tree on any (toks, starts, w)") {
     val prop = Prop.forAll(Gen.listOfN(6, Gen.zip(arrGen, startsGen)),
         Gen.chooseNum(1, 9)) { (rows, w) =>
-      val df = rows.map { case (a, s) => (a.map(_.orNull), s) }
+      val df = rows.map { case (a, s) => (a.map(_.map(_.orNull)), s) }
         .toDF("toks", "starts")
         .select(col("toks").cast("array<string>").as("toks"),
           col("starts").cast("array<int>").as("starts"))
@@ -55,8 +64,8 @@ class MaskTokensKernelSpec extends SparkSpec {
           declarativeKept(col("toks"), col("starts"), w).as("d"))
         .collect()
       got.forall { r =>
-        val k = r.getSeq[String](0)
-        val d = r.getSeq[String](1)
+        val k = Option(r.getSeq[String](0))
+        val d = Option(r.getSeq[String](1))
         val ok = k == d
         if (!ok) Console.err.println(s"[mask-fuzz] w=$w\n  kernel=$k\n  declarative=$d")
         ok
